@@ -5,7 +5,7 @@ restated) on sf0.001. ``queries()``/``oracle_sql()`` cover SURVEY.md §2
 (history/metrics surface, dedup joins, text analysis, similarity
 search) against the driver's parquet tables — every registered query
 has a DuckDB oracle: SQL-portable ops directly, hash-family ops via
-md5-derived portable twins, and the extraction flagship via a committed
+md5-derived hash families, and the extraction flagship via a committed
 pure-Python fixture (tools/make_flagship_fixture.py; regenerated ONLY
 by that explicit tool run — never silently inside the contract).
 """
@@ -488,14 +488,12 @@ def _q_fingerprint_dedup(spark, sf_dir):
 
 
 def _q_minhash_lsh(spark, sf_dir):
-    """Banded MinHash LSH, oracle-checked end-to-end via the portable
-    md5-derived hash family (minhash_lsh_pairs_portable). The
-    vectorized pandas-UDF path (xxhash/blake2b, num_perm=64) is the
-    high-num_perm default, pinned by planted-dup + determinism tests."""
-    from xs_vlm_ocr_spark.operators.text_dedup import minhash_lsh_pairs_portable
+    """Banded MinHash LSH, oracle-checked end-to-end: the md5-derived
+    hash family of minhash_lsh_pairs is reproducible in DuckDB."""
+    from xs_vlm_ocr_spark.operators.text_dedup import minhash_lsh_pairs
 
     docs = _doc_table(spark, sf_dir, "documents")
-    return minhash_lsh_pairs_portable(docs, num_perm=16, bands=4).filter(
+    return minhash_lsh_pairs(docs, num_perm=16, bands=4).filter(
         F.col("est_jaccard") >= 0.5
     )
 
@@ -510,10 +508,10 @@ def _q_neardup_clusters(spark, sf_dir):
     is_canonical marks the one row per cluster a dedup keeps. Oracle:
     recursive-CTE transitive closure over the identical pair set."""
     from xs_vlm_ocr_spark.operators.components import assign_clusters
-    from xs_vlm_ocr_spark.operators.text_dedup import minhash_lsh_pairs_portable
+    from xs_vlm_ocr_spark.operators.text_dedup import minhash_lsh_pairs
 
     docs = _doc_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs_portable(docs, num_perm=16, bands=4).filter(
+    pairs = minhash_lsh_pairs(docs, num_perm=16, bands=4).filter(
         F.col("est_jaccard") >= 0.5
     )
     return assign_clusters(docs.select("doc_id"), pairs).select(
@@ -534,10 +532,10 @@ def _q_neardup_clusters_incremental(spark, sf_dir):
         connected_components,
         incremental_components,
     )
-    from xs_vlm_ocr_spark.operators.text_dedup import minhash_lsh_pairs_portable
+    from xs_vlm_ocr_spark.operators.text_dedup import minhash_lsh_pairs
 
     docs = _doc_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs_portable(docs, num_perm=16, bands=4).filter(
+    pairs = minhash_lsh_pairs(docs, num_perm=16, bands=4).filter(
         F.col("est_jaccard") >= 0.5
     )
     is_new = lambda c: F.col(c) % 5 == 0  # noqa: E731
@@ -619,11 +617,11 @@ def _q_deduped_kept_corpus(spark, sf_dir):
     )
     from xs_vlm_ocr_spark.operators.text_dedup import (
         contamination_spans,
-        minhash_lsh_pairs_portable,
+        minhash_lsh_pairs,
     )
 
     docs = _doc_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs_portable(docs, num_perm=16, bands=4).filter(
+    pairs = minhash_lsh_pairs(docs, num_perm=16, bands=4).filter(
         F.col("est_jaccard") >= 0.5
     )
     clusters = assign_clusters(docs.select("doc_id"), pairs)
@@ -695,13 +693,12 @@ def _q_minhash_index_maintenance(spark, sf_dir):
 
 
 def _q_simhash_near(spark, sf_dir):
-    """SimHash near-pairs, oracle-checked end-to-end via the portable
-    md5-derived 60-bit hash (simhash_near_pairs_portable); the
-    vectorized numpy-UDF default is pinned by planted-dup tests."""
-    from xs_vlm_ocr_spark.operators.text_dedup import simhash_near_pairs_portable
+    """SimHash near-pairs, oracle-checked end-to-end: the md5-derived
+    60-bit token hash of simhash_near_pairs is reproducible in DuckDB."""
+    from xs_vlm_ocr_spark.operators.text_dedup import simhash_near_pairs
 
     docs = _doc_table(spark, sf_dir, "documents")
-    return simhash_near_pairs_portable(docs, max_hamming=3, bands=4)
+    return simhash_near_pairs(docs, max_hamming=3, bands=4)
 
 
 def _q_media_decode(spark, sf_dir):

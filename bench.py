@@ -28,7 +28,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # apart from a real regression (round-3 verdict What's-wrong #1).
 _LOADS: dict[str, list[float]] = {}
 _RUN_SECS: dict[str, list[float]] = {}
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 # corpus sized to the sf tier: sf0.1 -> 50k interleaved docs (big enough
 # that per-job fixed overhead (~1.5-2 s: scheduling, Arrow setup, python
 # worker comm) doesn't dominate the docs/sec number)

@@ -9,8 +9,8 @@ These tests pin every cross-language seam:
   * Spark bypass output == pure ``extract_doc`` on adversarial docs
     (exotic whitespace, unknown kinds, blank text spans, empty media
     refs, pdf runs, html payloads);
-  * the bypass plan == the ship-all mapInPandas plan row-for-row (two
-    physical plans, one semantic);
+  * the Catalyst ``passthrough`` plan == its Python spec on the same
+    docs, with no Python node in the plan;
   * the bypass plan's Python inputs genuinely exclude plain-text span
     payloads (the point of the whole design).
 """
@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from xs_vlm_ocr_spark.extract.pipeline import _norm, extract_doc
 from xs_vlm_ocr_spark.operators.extraction import (
     _extract_spans_bypass,
-    _extract_spans_shipall,
+    extract_spans,
     norm_col,
     with_content_hash,
 )
@@ -120,46 +120,60 @@ def hashed(spark):
     return with_content_hash(_docs_df(spark)).cache()
 
 
+def _merged_full_text(extract):
+    from xs_vlm_ocr_spark.extract.pipeline import merge_full_text
+
+    return {
+        did: merge_full_text(extract(
+            [{"kind": k, "text": t, "media_ref": r, "offset": o}
+             for (k, t, r, o) in spans]
+        ))
+        for did, spans in EDGE_DOCS
+    }
+
+
 def test_bypass_equals_pure_extractor_on_edge_docs(spark, hashed):
     from xs_vlm_ocr_spark.extract.pipeline import extract_doc_bypass
 
     out = _extract_spans_bypass(hashed, extract_doc_bypass, "main_content_v1", None)
     rows = out.collect()
-    assert all(r["success"] for r in rows)
+    assert all(r["success"] and r["error_message"] == "" for r in rows)
+    assert all(r["model_name"] == "main_content_v1" for r in rows)
+    # content_hash is carried through unchanged
+    want_hash = {r["doc_id"]: r["content_hash"]
+                 for r in hashed.select("doc_id", "content_hash").collect()}
+    assert {r["doc_id"]: r["content_hash"] for r in rows} == want_hash
     got = _collect_spans(out)
     assert got == _expected()
     # full_text merge parity too
-    from xs_vlm_ocr_spark.extract.pipeline import merge_full_text
-
-    by_id = {r["doc_id"]: r["full_text"] for r in rows}
-    for did, spans in EDGE_DOCS:
-        exp = merge_full_text(extract_doc(
-            [{"kind": k, "text": t, "media_ref": r, "offset": o}
-             for (k, t, r, o) in spans]
-        ))
-        assert by_id[did] == exp, did
+    assert {r["doc_id"]: r["full_text"] for r in rows} == \
+        _merged_full_text(extract_doc)
 
 
-def test_bypass_equals_shipall_row_for_row(spark, hashed):
-    """Two physical plans, one semantic: the scalar-UDF bypass plan and
-    the mapInPandas ship-all plan produce identical rows (modulo the
-    timing/lineage carrier columns)."""
-    from xs_vlm_ocr_spark.extract.pipeline import extract_doc_bypass
+def test_passthrough_is_catalyst_and_equals_python_spec(spark):
+    """``passthrough`` runs as a Catalyst expression: on every edge doc
+    it equals its Python spec in (kind, text, media_ref, order) and in
+    full_text, and its executed plan has no Python node."""
+    from oracles import passthrough_doc
 
-    cols = ["doc_id", "success", "error_message", "spans_out", "full_text",
-            "model_name", "content_hash"]
-
-    def key(df):
-        return sorted(
-            (r["doc_id"], r["success"], r["error_message"],
-             tuple(tuple(s) for s in r["spans_out"]),
-             r["full_text"], r["model_name"], r["content_hash"])
-            for r in df.select(*cols).collect()
-        )
-
-    a = _extract_spans_bypass(hashed, extract_doc_bypass, "main_content_v1", None)
-    b = _extract_spans_shipall(hashed, extract_doc, "main_content_v1", None)
-    assert key(a) == key(b)
+    out = extract_spans(_docs_df(spark), "passthrough")
+    rows = out.collect()
+    assert len(rows) == len(EDGE_DOCS)
+    assert all(r["success"] and r["error_message"] == "" for r in rows)
+    assert all(r["processing_time_ms"] == 0 and r["cum_wall_ms"] == 0
+               for r in rows)
+    want = {
+        did: [(s["kind"], s["text"], s["media_ref"], s["order"])
+              for s in passthrough_doc(
+                  [{"kind": k, "text": t, "media_ref": r, "offset": o}
+                   for (k, t, r, o) in spans])]
+        for did, spans in EDGE_DOCS
+    }
+    assert _collect_spans(out) == want
+    assert {r["doc_id"]: r["full_text"] for r in rows} == \
+        _merged_full_text(passthrough_doc)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "PythonUDF" not in plan, plan
 
 
 def test_bypass_ships_no_plain_text_bytes(spark, hashed):

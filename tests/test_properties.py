@@ -97,10 +97,9 @@ def test_prefix_filter_ngram_equals_bruteforce_random(spark):
 
     from pyspark.sql import functions as F
 
-    from xs_vlm_ocr_spark.operators.text_dedup import (
-        ngram_jaccard_pairs,
-        with_word_shingles,
-    )
+    from oracles import with_word_shingles
+
+    from xs_vlm_ocr_spark.operators.text_dedup import ngram_jaccard_pairs
 
     rng = random.Random(99)
     vocab = [f"w{i}" for i in range(10)]

@@ -116,3 +116,35 @@ def test_fan_out_estimates_packed_partitions(spark, tmp_path_factory):
     assert len(df.inputFiles()) >= target  # raw count would skip the guard
     out = fan_out_small_input(df)
     assert out.rdd.getNumPartitions() == target  # repartition applied
+
+
+def test_fan_out_stat_loop_is_bounded(spark, monkeypatch):
+    """A huge listing is stat'ed only until the charged bytes reach
+    target * maxPartitionBytes; the decision equals the full count's."""
+    import os
+
+    from xs_vlm_ocr_spark.operators.skew import fan_out_small_input
+
+    target = spark.sparkContext.defaultParallelism
+    conf = spark._jsparkSession.sessionState().conf()
+    max_split = conf.filesMaxPartitionBytes()
+    open_cost = conf.filesOpenCostInBytes()
+    n_files = 100_000
+    listing = [f"file:/synthetic/part-{i:06d}.parquet" for i in range(n_files)]
+    for size in (1024, 64 * 1024 * 1024):  # below / above openCostInBytes
+        charged = max(size, open_cost)
+        calls = []
+
+        def fake_getsize(path, _size=size, _calls=calls):
+            _calls.append(path)
+            return _size
+
+        df = spark.range(10)
+        monkeypatch.setattr(df, "inputFiles", lambda: listing)
+        monkeypatch.setattr(os.path, "getsize", fake_getsize)
+        out = fan_out_small_input(df)
+        monkeypatch.undo()
+        assert len(calls) == -(-target * max_split // charged), size
+        # the full listing packs into >= target splits: left untouched
+        assert -(-n_files * charged // max_split) >= target
+        assert out is df

@@ -73,37 +73,3 @@ def test_engine_dispatch_changes_extraction(spark):
     # passthrough keeps boilerplate -> strictly more text on html docs
     assert any(len(p[d]) > len(m[d]) for d in m)
     assert all(len(p[d]) >= len(m[d]) > 0 or p[d] == m[d] for d in m)
-
-
-def test_arrays_and_dict_paths_produce_identical_output(spark):
-    """The mapInPandas stage takes the arrays fast path when a strategy
-    exposes `arrays_impl` and the dict-adapter fallback otherwise. Both
-    conventions must yield byte-identical rows for the same extractor —
-    pin it by registering the canonical extract_doc WITHOUT its
-    arrays_impl attribute and diffing full outputs."""
-    from xs_vlm_ocr_spark.corpus import gen_docs_df
-    from xs_vlm_ocr_spark.extract.pipeline import extract_doc
-    from xs_vlm_ocr_spark.operators.extraction import extract_spans, split_extraction_output
-
-    def dict_only(spans):  # same semantics, no arrays_impl attribute
-        return extract_doc(spans)
-
-    S.REGISTRY["dict_only_test"] = dict_only
-    try:
-        docs = gen_docs_df(spark, 30)
-        fast, _ = split_extraction_output(extract_spans(docs, "main_content_v1"))
-        slow, _ = split_extraction_output(extract_spans(docs, "dict_only_test"))
-        key = lambda r: r["doc_id"]  # noqa: E731
-        a = sorted(
-            ((r["doc_id"], r["success"], r["full_text"],
-              tuple((s["kind"], s["text"], s["media_ref"], s["order"])
-                    for s in (r["spans_out"] or [])))
-             for r in fast.collect()), key=lambda t: t[0])
-        b = sorted(
-            ((r["doc_id"], r["success"], r["full_text"],
-              tuple((s["kind"], s["text"], s["media_ref"], s["order"])
-                    for s in (r["spans_out"] or [])))
-             for r in slow.collect()), key=lambda t: t[0])
-        assert a == b
-    finally:
-        del S.REGISTRY["dict_only_test"]

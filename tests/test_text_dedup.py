@@ -53,25 +53,32 @@ def test_ngram_jaccard_finds_planted(corpus_df):
 
 
 def test_minhash_lsh_finds_planted_and_estimates(corpus_df):
-    got = {(r["a"], r["b"]): r["est_jaccard"]
-           for r in minhash_lsh_pairs(corpus_df, num_perm=64, bands=16).collect()}
-    assert got.get(("d900", "d902"), 0) == 1.0          # identical signature
-    assert got.get(("d900", "d901"), 0) > 0.6           # near-identical
-    assert got.get(("d000", "d900"), 0) == 1.0
+    """The md5-family banded MinHash (the oracle-checked contract query)
+    finds every planted dup and estimates its Jaccard."""
+    for num_perm, bands in ((16, 4), (64, 16)):
+        got = {(r["a"], r["b"]): r["est_jaccard"]
+               for r in minhash_lsh_pairs(corpus_df, num_perm=num_perm,
+                                          bands=bands).collect()}
+        assert got.get(("d900", "d902"), 0) == 1.0      # identical signature
+        assert got.get(("d000", "d900"), 0) == 1.0
+        assert got.get(("d000", "d902"), 0) == 1.0
+        assert got.get(("d900", "d901"), 0) > 0.6       # near-identical
 
 
 def test_minhash_deterministic(corpus_df, spark):
     a = sorted(map(tuple, minhash_lsh_pairs(corpus_df).collect()))
     b = sorted(map(tuple, minhash_lsh_pairs(corpus_df.repartition(7)).collect()))
-    assert a == b
+    assert a and a == b
 
 
 def test_simhash_near_pairs(corpus_df):
     pairs = {(r["a"], r["b"]): r["hamming"] for r in
-             simhash_near_pairs(corpus_df, max_hamming=6).collect()}
+             simhash_near_pairs(corpus_df, max_hamming=5, bands=6).collect()}
     assert pairs.get(("d900", "d902")) == 0   # identical text -> identical hash
     assert pairs.get(("d000", "d900")) == 0
+    assert pairs.get(("d000", "d902")) == 0
     assert ("d900", "d901") in pairs          # one-word edit -> few bits flip
+    assert all(h <= 5 for h in pairs.values())
 
 
 def test_embedding_near_dup(spark):
@@ -159,7 +166,7 @@ def test_grid_prunes_clustered_data_at_tight_threshold(spark):
 def test_ngram_prefix_filter_matches_bruteforce(corpus_df, spark):
     """Prefix filtering is an exact optimization: results must equal the
     naive shingle self-join at every threshold."""
-    from xs_vlm_ocr_spark.operators.text_dedup import with_word_shingles
+    from oracles import with_word_shingles
 
     sh = with_word_shingles(corpus_df)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
@@ -198,35 +205,11 @@ def test_ngram_l_prefix_invariant(corpus_df):
             assert got == base, f"l={ell} changed results at t={t}"
 
 
-def test_portable_minhash_finds_planted(corpus_df):
-    """md5-hash-family variant (the oracle-checked contract query) finds
-    the same planted dups as the vectorized default."""
-    from xs_vlm_ocr_spark.operators.text_dedup import minhash_lsh_pairs_portable
-
-    got = {(r["a"], r["b"]): r["est_jaccard"]
-           for r in minhash_lsh_pairs_portable(corpus_df, num_perm=16,
-                                               bands=4).collect()}
-    assert got.get(("d900", "d902"), 0) == 1.0
-    assert got.get(("d000", "d900"), 0) == 1.0
-    assert got.get(("d900", "d901"), 0) > 0.5
-
-
-def test_portable_simhash_finds_planted(corpus_df):
-    from xs_vlm_ocr_spark.operators.text_dedup import simhash_near_pairs_portable
-
-    pairs = {(r["a"], r["b"]): r["hamming"] for r in
-             simhash_near_pairs_portable(corpus_df, max_hamming=3).collect()}
-    assert pairs.get(("d900", "d902")) == 0
-    assert pairs.get(("d000", "d900")) == 0
-
-
 # ---------------------------------------------------- tokenizer parity
-# Round-3 verdict What's-wrong #2: the default (Python) MinHash tokenizer
-# used str.split(), which also breaks on Unicode whitespace (\x1c-\x1f,
-# \x85, NBSP...) that the pinned WS_RE class does not — so the default
-# and the portable md5 twin silently differed in MORE than hash family
-# on exotic-whitespace text. Both now tokenize identically by
-# construction; these tests pin it.
+# A bare str.split() also breaks on Unicode whitespace (\x1c-\x1f,
+# \x85, NBSP...) that the pinned WS_RE class does not. The JVM gram
+# producer is pinned against the Python spec in tests/oracles.py, and
+# that spec against an independent char scan.
 
 EXOTIC_TEXTS = [
     "",
@@ -246,13 +229,11 @@ EXOTIC_TEXTS = [
 
 
 def test_default_grams_match_jvm_twin_on_exotic_whitespace(spark):
-    """The gram STRINGS of the Python default path equal the JVM
-    (portable-twin) gram strings on every exotic-whitespace input —
-    tokenization now differs only in hash family, never in splitting."""
-    from xs_vlm_ocr_spark.operators.text_dedup import (
-        _doc_grams,
-        with_word_gram_strings,
-    )
+    """The JVM gram STRINGS (``with_word_gram_strings``) equal the Python
+    gram spec on every exotic-whitespace input."""
+    from oracles import doc_grams
+
+    from xs_vlm_ocr_spark.operators.text_dedup import with_word_gram_strings
 
     df = spark.createDataFrame(
         [(f"t{i:02d}", s) for i, s in enumerate(EXOTIC_TEXTS)],
@@ -264,17 +245,16 @@ def test_default_grams_match_jvm_twin_on_exotic_whitespace(spark):
             jvm.setdefault(r["doc_id"], set()).add(r["g"])
         for i, s in enumerate(EXOTIC_TEXTS):
             did = f"t{i:02d}"
-            assert set(_doc_grams(s, n)) == jvm.get(did, set()), (n, repr(s))
+            assert set(doc_grams(s, n)) == jvm.get(did, set()), (n, repr(s))
 
 
 def test_tokenize_matches_spec_hypothesis():
-    """_tokenize == an independent char-scan mirror of the JVM spec
+    """The tokenizer spec == an independent char-scan mirror of the JVM
     split(lower(trim(text)), WS_RE), over hypothesis strings drawn with
     exotic whitespace mixed in."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
-
-    from xs_vlm_ocr_spark.operators.text_dedup import _tokenize
+    from oracles import tokenize
 
     WS = set(" \t\n\r\f\x0b")
 
@@ -299,7 +279,7 @@ def test_tokenize_matches_spec_hypothesis():
     @settings(max_examples=300, deadline=None)
     @given(st.text(alphabet=alphabet, max_size=30))
     def check(text):
-        assert _tokenize(text) == spec(text), repr(text)
+        assert tokenize(text) == spec(text), repr(text)
 
     check()
 
@@ -307,12 +287,11 @@ def test_tokenize_matches_spec_hypothesis():
 def test_minhash_index_probe_incremental(corpus_df, spark):
     """Incremental near-dup: a committed minhash_band_index probed with a
     new batch finds planted clones WITHOUT recomputing index signatures,
-    and equals the full portable pairs restricted to cross pairs."""
+    and equals the full within-set pairs restricted to cross pairs."""
     from pyspark.sql import functions as F
 
     from xs_vlm_ocr_spark.operators.text_dedup import (
         minhash_band_index,
-        minhash_lsh_pairs_portable,
         minhash_probe_index,
     )
 
@@ -329,7 +308,7 @@ def test_minhash_index_probe_incremental(corpus_df, spark):
     assert got.get(("d000", "d901"), 0) > 0.5
 
     # consistency: probe == full-pairs restricted to (committed, new)
-    full = minhash_lsh_pairs_portable(corpus_df, num_perm=16, bands=4)
+    full = minhash_lsh_pairs(corpus_df, num_perm=16, bands=4)
     cross = {}
     for r in full.collect():
         a, b = r["a"], r["b"]

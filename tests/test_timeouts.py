@@ -12,7 +12,7 @@ import time
 
 from xs_vlm_ocr_spark import strategies
 from xs_vlm_ocr_spark.corpus import gen_docs_df
-from xs_vlm_ocr_spark.extract import extract_doc
+from xs_vlm_ocr_spark.extract.pipeline import extract_doc_bypass
 from xs_vlm_ocr_spark.operators.extraction import (
     extract_spans,
     split_extraction_output,
@@ -24,9 +24,10 @@ def test_timeout_routes_error_rows(spark, monkeypatch):
     # defined in-test: cloudpickle serializes the closure by VALUE
     # (a module-level function would pickle by reference to a module
     # the executor workers can't import)
-    def _slow_engine(spans, _sleep=time.sleep, _extract=extract_doc):
+    def _slow_engine(codes, offs, heavy, blanks, _sleep=time.sleep,
+                     _extract=extract_doc_bypass):
         _sleep(0.1)
-        return _extract(spans)
+        return _extract(codes, offs, heavy, blanks)
 
     monkeypatch.setitem(strategies.REGISTRY, "slow_engine", _slow_engine)
     docs = with_content_hash(gen_docs_df(spark, 8), "slow_engine")

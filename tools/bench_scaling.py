@@ -53,13 +53,9 @@ if model == "noop":
     # bytes are echoed back, text/media spans pass through JVM-side.
     # This is the engine-overhead CONTROL: if this pair scales, Spark's
     # machinery + the bypass boundary are not the high-core bottleneck
-    # and the residual is the real extractor's compute. (Pre-r5 noop
-    # controls rode the legacy ship-all mapInPandas path — r5+ noop
-    # numbers are a different, now-plan-matched control.)
+    # and the residual is the real extractor's compute.
     from xs_vlm_ocr_spark.strategies import REGISTRY
-    def _noop(spans):
-        raise NotImplementedError("bypass path only")
-    def _noop_bypass(codes, offs, heavy, blanks):
+    def _noop(codes, offs, heavy, blanks):
         order = sorted(range(len(codes)), key=offs.__getitem__)
         o_texts, o_src = [], []
         for i in order:
@@ -68,22 +64,7 @@ if model == "noop":
             else:
                 o_texts.append(None); o_src.append(i)
         return o_texts, o_src
-    def _noop_arrays(kinds, texts, refs, offs):
-        return list(kinds), list(texts), list(refs)
-    _noop.bypass_impl = _noop_bypass
-    _noop.arrays_impl = _noop_arrays
     REGISTRY["noop"] = _noop
-
-if model == "shipall":
-    # SAME semantics as main_content_v1 but forced onto the legacy
-    # ship-everything mapInPandas path (no bypass_impl): the A/B control
-    # that isolates what the Arrow-bypass buys at each parallelism level
-    from xs_vlm_ocr_spark.strategies import REGISTRY
-    from xs_vlm_ocr_spark.extract.pipeline import extract_doc, extract_doc_arrays
-    def _shipall(spans):
-        return extract_doc(spans)
-    _shipall.arrays_impl = extract_doc_arrays
-    REGISTRY["shipall"] = _shipall
 
 if model == "cpuburn":
     # pure-register CPU control: ~0.4 ms of arithmetic per doc, near-zero
@@ -92,20 +73,11 @@ if model == "cpuburn":
     # failing noop (serde-only) control it pins the residual on memory
     # bandwidth, which on a real 4N cluster scales with nodes.
     from xs_vlm_ocr_spark.strategies import REGISTRY
-    def _burn(spans):
-        raise NotImplementedError("bypass path only")
-    def _burn_bypass(codes, offs, heavy, blanks):
+    def _burn(codes, offs, heavy, blanks):
         x = 1
         for _ in range(4000):
             x = (x * 1103515245 + 12345) & 0xFFFFFFFF
         return [str(x)], [-1]
-    def _burn_arrays(kinds, texts, refs, offs):
-        x = 1
-        for _ in range(4000):
-            x = (x * 1103515245 + 12345) & 0xFFFFFFFF
-        return ["burn"], [str(x)], [""]
-    _burn.bypass_impl = _burn_bypass
-    _burn.arrays_impl = _burn_arrays
     REGISTRY["cpuburn"] = _burn
 
 spark = get_spark(f"bench_scaling_{cores}", cores=cores, shuffle_partitions=cores)
@@ -363,16 +335,11 @@ def main() -> None:
         measure_pair(8, 32, n_docs, n_pairs),
         # driver-shaped interleave docs (html boilerplate + media + plain
         # text): the workload where the Arrow-bypass transport cut is
-        # largest (~49% of boundary bytes — tools/transport_bytes.py);
-        # docs are smaller, so 4x the count keeps per-core work comparable
-        # (run d used 2x; its 4N runs were short enough that overhead
-        # dominated the raw ratio — hence raw 0.469 vs adjusted 0.617)
+        # largest; docs are smaller, so 4x the count keeps per-core work
+        # comparable (run d used 2x; its 4N runs were short enough that
+        # overhead dominated the raw ratio — hence raw 0.469 vs adjusted
+        # 0.617)
         measure_pair(8, 32, n_docs * 4, n_pairs, shape="interleave"),
-        # A/B controls: identical semantics forced onto the legacy
-        # ship-everything path — what the bypass buys/costs, per shape
-        measure_pair(8, 32, n_docs * 4, n_pairs, model="shipall",
-                     shape="interleave"),
-        measure_pair(8, 32, n_docs, n_pairs, model="shipall"),
         # engine-overhead CONTROL at the contested pair: identity extract,
         # same plan/serde, zero per-token python compute
         measure_pair(8, 32, n_docs, n_pairs, model="noop"),
@@ -385,10 +352,7 @@ def main() -> None:
     def _tag(r):
         if r["model"] == "noop":
             return " — noop CONTROL"
-        if r.get("shape") == "interleave":
-            return (" — interleave-shaped, ship-all CONTROL"
-                    if r["model"] == "shipall" else " — interleave-shaped")
-        return " — ship-all CONTROL" if r["model"] == "shipall" else ""
+        return " — interleave-shaped" if r.get("shape") == "interleave" else ""
 
     def _tag2(r):
         return " — cpu-burn CONTROL" if r["model"] == "cpuburn" else _tag(r)
@@ -424,8 +388,6 @@ def main() -> None:
                    and r.get("shape") == "corpus")
     il_82 = next((r for r in results if r.get("shape") == "interleave"
                   and r["model"] == "main_content_v1"), None)
-    il_ship = next((r for r in results if r.get("shape") == "interleave"
-                    and r["model"] == "shipall"), None)
     noop = next((r for r in results if r["model"] == "noop"), None)
     burn = next((r for r in results if r["model"] == "cpuburn"), None)
     def _il(h):
@@ -444,10 +406,7 @@ def main() -> None:
         f'| this run | HEAD | {ceiling["ceiling"]:.3f} | '
         f'{results[0]["median_eff"]:.3f} / {results[0]["median_adj_eff"]:.3f} | '
         f'{real_82["median_eff"]:.3f} / {real_82["median_adj_eff"]:.3f} | '
-        + (f'{il_82["median_eff"]:.3f} / {il_82["median_adj_eff"]:.3f}'
-           + (f' (ship-all {il_ship["median_eff"]:.3f} / '
-              f'{il_ship["median_adj_eff"]:.3f})' if il_ship is not None else "")
-           + " | "
+        + (f'{il_82["median_eff"]:.3f} / {il_82["median_adj_eff"]:.3f} | '
            if il_82 is not None else "— | ")
         + (f'{burn["median_adj_eff"]:.3f} '
            f'({burn["median_adj_eff"] / ceiling["ceiling"]:.0%}) | '
@@ -523,34 +482,6 @@ no error). The harness detects silence, kills the pair and remeasures
 (`Worker.CMD_TIMEOUT`); on a real cluster `spark.speculation`
 re-launches exactly this straggler, and the extraction stage is a pure
 function so speculative duplicates are safe.""")
-    # Arrow-transport accounting (written by tools/transport_bytes.py
-    # into BENCH/transport_bytes.json; deterministic, no timing)
-    tb_path = os.path.join(REPO, "BENCH", "transport_bytes.json")
-    if os.path.exists(tb_path):
-        with open(tb_path) as f:
-            tb = [json.loads(line) for line in f if line.strip()]
-        tb_rows = "\n".join(
-            f'| {t["workload"]} | {t["shipall_in_bytes"]:,} | '
-            f'{t["bypass_in_bytes"]:,} | {t["shipall_out_bytes"]:,} | '
-            f'{t["bypass_out_bytes"]:,} | **{t["total_reduction"]:.1%}** |'
-            for t in tb
-        )
-        parts.append(f"""
-**Arrow-transport accounting** (tools/transport_bytes.py — bytes that
-cross the JVM<->Python boundary, computed from the data, per design):
-
-| workload | ship-all in | bypass in | ship-all out | bypass out | total cut |
-|---|---|---|---|---|---|
-{tb_rows}
-
-The round-4 Arrow-bypass plan (operators/extraction.py) keeps plain-text
-span payloads and media refs out of Python entirely; html/pdf payloads
-still cross (strip_html/XY-cut are the Python stage). On the synthetic
-scaling corpus (45% html / 35% pdf by doc count, payload-dominated)
-the cut is small; on the driver-shaped interleave — the BASELINE.json
-input_hint shape, where each doc's body rode the boundary twice — it
-removes about half the boundary bytes, which is what the interleave
-scaling pair above exercises.""")
     control_md = "\n".join(parts)
     md = f"""# BENCH/BASELINE — scaling-efficiency evidence
 

@@ -22,7 +22,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # package itself, repo-root entry modules and the test/bench toolchain
 ALLOWED_IMPORTS = {"pyspark", "numpy", "pandas", "pyarrow", "duckdb",
                    "xs_vlm_ocr_spark", "py4j", "pytest", "hypothesis",
-                   "__spark_entry__", "job_main", "tools", "bench"}
+                   "__spark_entry__", "job_main", "tools", "bench", "oracles"}
 # secrets / internal-endpoint shapes that must never appear
 LEAK_RES = [
     r"(?i)aws_secret|aws_access_key_id",

@@ -126,7 +126,7 @@ CHECKS: dict[str, list[tuple[str, object]]] = {
         ("signature agg map-side combines", _has("partial_min")),
     ],
     "simhash_near_pairs": [
-        ("no python UDF anywhere in the plan (portable twin)", _absent("PythonUDF")),
+        ("no python UDF anywhere in the plan (md5 family)", _absent("PythonUDF")),
     ],
     "neardup_clusters": [
         # large-star/small-star already converged when this df is built;

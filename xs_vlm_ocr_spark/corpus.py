@@ -208,9 +208,9 @@ def gen_interleave_doc(doc_id: str, seed: int = DEFAULT_SEED) -> dict:
     input_hint, mirrored by __spark_entry__._interleave_documents): an
     html span wrapping the body in nav/footer boilerplate, a media span,
     and a plain-text span repeating the body. This is the workload where
-    the Arrow-bypass transport cut is largest (the body crosses the
-    boundary zero extra times instead of twice — tools/
-    transport_bytes.py), used by the scaling bench's interleave pair."""
+    the Arrow-bypass transport cut is largest (the plain-text copy of the
+    body never crosses the Python boundary), used by the scaling bench's
+    interleave pair."""
     rng = _rng(seed, doc_id)
     body = _paragraph(rng, rng.randint(8, 24))
     html = (

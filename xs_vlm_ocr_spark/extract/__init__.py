@@ -2,7 +2,7 @@
 
 Every function here is deterministic, stateless, and stdlib-only. The
 Spark operators in ``xs_vlm_ocr_spark.operators.extraction`` wrap exactly
-these functions in Arrow-batched ``mapInPandas`` stages, so golden-span
+these functions in an Arrow-batched pandas UDF, so golden-span
 equality (kind, text, media_ref, order) holds by construction and the
 pytest fixtures guard against batch-boundary state leaks.
 """

@@ -2,9 +2,9 @@
 
 ``extract_doc`` is the per-document semantic the whole engine is defined
 by: interleaved input spans -> ordered (kind, text, media_ref, order)
-output spans. It is the golden oracle AND the function the Spark
-``mapInPandas`` stage wraps — never duplicated, so the invariant holds by
-construction.
+output spans. It is the golden oracle, and it composes the same
+``extract_doc_bypass`` the Spark pandas UDF runs — never duplicated, so
+the invariant holds by construction.
 
 Stages (BASELINE.json:north_star):
   (a) html spans   -> strip_html boilerplate removal -> text segments
@@ -126,7 +126,7 @@ def assemble_spans(
     """The assembly half of the split, as a pure function: resolve the
     bypass stage's passthrough slots against the original spans. The
     Spark plan evaluates EXACTLY this rule as a Catalyst transform()
-    (operators.extraction._assemble_cols) — cross-implementation parity
+    (operators.extraction._assemble_col) — cross-implementation parity
     is pinned end-to-end by tests/test_end_to_end.py golden equality
     and per-codepoint by the _norm parity test."""
     out_kinds: list[str] = []
@@ -195,16 +195,6 @@ def extract_doc(spans: Sequence[Span]) -> list[OutSpan]:
         {"kind": k, "text": t, "media_ref": m, "order": i}
         for i, (k, t, m) in enumerate(zip(out_kinds, out_texts, out_refs))
     ]
-
-
-# Spark-stage dispatch markers (operators.extraction.extract_spans):
-#   bypass_impl — the Arrow-bypass calling convention (preferred: only
-#                 html/pdf bytes cross into Python); implies the
-#                 canonical assemble_spans contract on the JVM side;
-#   arrays_impl — parallel-primitive-array full convention (legacy
-#                 ship-everything path, used by custom strategies).
-extract_doc.bypass_impl = extract_doc_bypass
-extract_doc.arrays_impl = extract_doc_arrays
 
 
 def merge_full_text(spans_out: Iterable[OutSpan]) -> str:

@@ -4,7 +4,7 @@ restated as one declarative Spark plan.
     read docs -> validity filter (P3) -> content_hash (D1 canonical md5)
     -> anti-join committed results (cache/resume, D1/J2)
     -> repartitionByRange on byte-length quantiles (skew, north rule)
-    -> mapInPandas extraction (E-family) with in-band lineage
+    -> Arrow-bypass extraction (E-family) with in-band lineage
     -> single staged write, split into results + lineage appends
     -> atomic manifest commit (Iceberg-snapshot stand-in)
 

@@ -7,9 +7,9 @@ wrapping the pure single-doc functions of ``xs_vlm_ocr_spark.extract``
 (so golden equality holds by construction and no state can leak across
 batch boundaries).
 
-Two physical plans, one semantic:
+An engine runs on one of two plans, and both feed one output projection:
 
-  * **Arrow-bypass** (default, strategies exposing ``bypass_impl``):
+  * **Arrow-bypass** (every Python engine, e.g. ``main_content_v1``):
     a SCALAR pandas UDF over exactly four derived columns — kind codes
     (int), offsets (int), html/pdf payloads, text-blank flags. Plain
     ``text`` spans and ``media`` refs never cross the Arrow boundary in
@@ -19,12 +19,10 @@ Two physical plans, one semantic:
     placeholders against the ORIGINAL span array, which never leaves the
     JVM. Reference analogue: the adapters ship only the image payload,
     never the already-known metadata (src/adapters/QwenAdapter.cpp:
-    99-125). The noop control in BENCH/BASELINE.md measured Arrow
-    transport as the residual 8->32 scaling bottleneck; this path
-    removes the majority of those bytes.
-  * **ship-all** (``mapInPandas`` fallback for custom strategies that
-    only implement the dict or parallel-arrays convention): everything
-    crosses, exactly the round-3 plan.
+    99-125). The only Python is the html strip and the pdf XY-cut.
+  * **Catalyst** (the ``"passthrough"`` engine): an offset sort, a kind
+    map and a whitespace normalize are all expressible in SQL, so that
+    engine is one span-array expression with no Python node in the plan.
 
 Design points for 100 TB:
   * everything upstream/downstream of the UDF is JVM-side Catalyst
@@ -38,13 +36,13 @@ Design points for 100 TB:
     ``split_extraction_output`` — map-side partial agg, no second pass
     over the data, no driver-side accumulation;
   * per-doc processing_time_ms instrumentation (reference
-    src/core/OCRResult.h:26); cache hits carry 0 (MainWindow.cpp:1654).
+    src/core/OCRResult.h:26); cache hits carry 0 (MainWindow.cpp:1654),
+    and so does the Catalyst plan, which runs no Python to time.
 """
 
 from __future__ import annotations
 
 import time
-from typing import Iterator
 
 import pandas as pd
 from pyspark import TaskContext
@@ -57,7 +55,7 @@ from xs_vlm_ocr_spark.extract.pipeline import (
     KIND_MEDIA,
     KIND_PDF,
     KIND_TEXT,
-    extract_doc,
+    extract_doc_bypass,
 )
 from xs_vlm_ocr_spark.operators.text_analysis import WS_RE
 
@@ -120,9 +118,11 @@ def extract_spans(docs: DataFrame, model_name: str = DEFAULT_MODEL,
     extractor is a pure function so a soft budget suffices.
 
     Engine dispatch (reference MainWindow.cpp:846-882): strategy name ->
-    registered single-doc extractor; unknown names use the default.
-    Strategies exposing ``bypass_impl`` run the Arrow-bypass plan;
-    arrays/dict-convention strategies fall back to ship-all mapInPandas.
+    registered bypass-convention extractor, run on the Arrow-bypass
+    plan; unknown names use the default. The ``"passthrough"`` engine
+    has no Python extractor and runs as a Catalyst expression, so its
+    ``processing_time_ms`` and lineage wall time are 0 and
+    ``timeout_ms`` has nothing to bound.
 
     ``passthrough``: extra narrow columns of ``docs`` (e.g. the replay
     path's ``is_hit`` flag) carried verbatim onto the output rows.
@@ -131,12 +131,66 @@ def extract_spans(docs: DataFrame, model_name: str = DEFAULT_MODEL,
         docs = with_content_hash(docs, model_name)
     from xs_vlm_ocr_spark.strategies import REGISTRY
 
-    extract_fn = REGISTRY.get(model_name, extract_doc)
-    bypass_fn = getattr(extract_fn, "bypass_impl", None)
+    bypass_fn = REGISTRY.get(model_name, extract_doc_bypass)
     pt = passthrough or []
-    if bypass_fn is not None:
-        return _extract_spans_bypass(docs, bypass_fn, model_name, timeout_ms, pt)
-    return _extract_spans_shipall(docs, extract_fn, model_name, timeout_ms, pt)
+    if bypass_fn is None:
+        return _output(docs, _passthrough_spans(F.col("spans")),
+                       F.lit(None).cast("string"), F.lit(0).cast("long"),
+                       F.lit(0).cast("long"), model_name, pt)
+    return _extract_spans_bypass(docs, bypass_fn, model_name, timeout_ms, pt)
+
+
+def _output(df: DataFrame, spans_out: Column, err: Column, ms: Column,
+            cum_wall_ms: Column, model_name: str,
+            passthrough: list[str]) -> DataFrame:
+    """The output projection both plans share. Two selects on purpose:
+    full_text derives from the ALIASED spans_out column, so the
+    (non-cheap, interpreted — higher-order functions have no codegen)
+    assembly expression is evaluated once per row; CollapseProject
+    keeps the boundary because the alias is referenced twice."""
+    assembled = df.select(
+        "doc_id",
+        err.isNull().alias("success"),
+        F.coalesce(err, F.lit("")).alias("error_message"),
+        spans_out.alias("spans_out"),
+        F.lit(model_name).alias("model_name"),
+        "content_hash",
+        ms.alias("processing_time_ms"),
+        F.spark_partition_id().alias("partition_id"),
+        cum_wall_ms.alias("cum_wall_ms"),
+        *passthrough,
+    )
+    return assembled.select(
+        "doc_id", "success", "error_message", "spans_out",
+        full_text_col(F.col("spans_out")).alias("full_text"),
+        "model_name", "content_hash", "processing_time_ms",
+        "partition_id", "cum_wall_ms", *passthrough,
+    )
+
+
+# ------------------------------------------------ Catalyst plan
+
+def _passthrough_spans(spans: Column) -> Column:
+    """spans_out of the ``passthrough`` engine: every span in offset
+    order (ties by input index — struct ordering compares fields left to
+    right), media spans keep their ref, every other kind becomes a
+    ``norm_col`` text span. No span is dropped."""
+    ordered = F.array_sort(F.transform(
+        spans, lambda s, i: F.struct(s["offset"].alias("o"), i.alias("i"),
+                                     s.alias("s"))))
+
+    def out(z: Column, j: Column) -> Column:
+        s = z["s"]
+        is_media = s["kind"] == F.lit("media")
+        return F.struct(
+            F.when(is_media, F.lit("media")).otherwise(F.lit("text")).alias("kind"),
+            F.when(is_media, F.lit(""))
+            .otherwise(norm_col(F.coalesce(s["text"], F.lit("")))).alias("text"),
+            F.coalesce(s["media_ref"], F.lit("")).alias("media_ref"),
+            j.cast("int").alias("order"),
+        )
+
+    return F.transform(ordered, out)
 
 
 # ------------------------------------------------------- bypass plan
@@ -207,9 +261,8 @@ def _bypass_udf(bypass_fn, timeout_ms: int | None):
     # InferFiltersFromGenerate turns a downstream explode(spans_out) into
     # a size()>0 filter whose pushed-down condition CONTAINS the UDF,
     # running the whole extraction twice (observed: 2x ArrowEvalPython in
-    # the physical plan). mapInPandas had this barrier by construction;
-    # this restores it for the scalar-UDF plan
-    # (tests/test_extraction_bypass.py pins single-evaluation).
+    # the physical plan; tests/test_extraction_bypass.py pins
+    # single-evaluation).
     return F.pandas_udf(run, returnType=_BYPASS_RESULT_TYPE).asNondeterministic()
 
 
@@ -310,148 +363,9 @@ def _extract_spans_bypass(docs: DataFrame, bypass_fn, model_name: str,
     )
     udf = _bypass_udf(bypass_fn, timeout_ms)
     out = pre.withColumn("_x", udf(codes, F.col("_offs"), F.col("_heavy"), blanks))
-    spans_out = _assemble_col(kcol, F.col("_x"))
-    # two selects on purpose: full_text derives from the ALIASED
-    # spans_out column, so the (non-cheap, interpreted — higher-order
-    # functions have no codegen) assembly expression is evaluated once
-    # per row; CollapseProject keeps the boundary because the alias is
-    # referenced twice
-    assembled = out.select(
-        "doc_id",
-        F.col("_x.err").isNull().alias("success"),
-        F.coalesce(F.col("_x.err"), F.lit("")).alias("error_message"),
-        spans_out.alias("spans_out"),
-        F.lit(model_name).alias("model_name"),
-        "content_hash",
-        F.col("_x.ms").alias("processing_time_ms"),
-        F.spark_partition_id().alias("partition_id"),
-        F.col("_x.cum_wall_ms").alias("cum_wall_ms"),
-        *passthrough,
-    )
-    return assembled.select(
-        "doc_id", "success", "error_message", "spans_out",
-        full_text_col(F.col("spans_out")).alias("full_text"),
-        "model_name", "content_hash", "processing_time_ms",
-        "partition_id", "cum_wall_ms", *passthrough,
-    )
-
-
-# ------------------------------------------------- ship-all fallback
-
-def _extract_spans_shipall(docs: DataFrame, extract_fn, model_name: str,
-                           timeout_ms: int | None,
-                           passthrough: list[str] = ()) -> DataFrame:
-    """mapInPandas fallback for custom strategies without a bypass form:
-    every span crosses the Arrow boundary as four parallel primitive
-    arrays (still no per-span dicts when the strategy exposes
-    ``arrays_impl``); output spans are rebuilt JVM-side. Passthrough
-    columns ride through the Python stage verbatim (mapInPandas output
-    replaces its input, so they must cross)."""
-    src = docs.select(
-        "doc_id",
-        F.col("spans.kind").alias("_kinds"),
-        F.col("spans.text").alias("_texts"),
-        F.col("spans.media_ref").alias("_refs"),
-        F.col("spans.offset").alias("_offs"),
-        "content_hash",
-        *passthrough,
-    )
-    arrays_fn = getattr(extract_fn, "arrays_impl", None)
-
-    pt_ddl = "".join(
-        f", {f.name} {f.dataType.simpleString()}"
-        for f in docs.schema.fields if f.name in set(passthrough)
-    )
-    raw_ddl = (
-        "doc_id string, success boolean, error_message string, "
-        "o_kinds array<string>, o_texts array<string>, o_refs array<string>, "
-        "model_name string, content_hash string, "
-        "processing_time_ms long, partition_id int, cum_wall_ms long" + pt_ddl
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        t_start = time.monotonic()
-        for pdf in batches:
-            c_ok: list = []
-            c_err: list = []
-            c_k: list = []; c_t: list = []; c_r: list = []  # noqa: E702
-            c_ms: list = []
-            for kinds, texts, refs, offs in zip(
-                pdf["_kinds"], pdf["_texts"], pdf["_refs"], pdf["_offs"]
-            ):
-                t0 = time.monotonic_ns()
-                try:
-                    if arrays_fn is not None:
-                        out_k, out_t, out_r = arrays_fn(kinds, texts, refs, offs)
-                    else:
-                        out = extract_fn([
-                            {"kind": k, "text": t, "media_ref": r, "offset": int(o)}
-                            for k, t, r, o in zip(kinds, texts, refs, offs)
-                        ])
-                        out_k = [s["kind"] for s in out]
-                        out_t = [s["text"] for s in out]
-                        out_r = [s["media_ref"] for s in out]
-                    elapsed = (time.monotonic_ns() - t0) // 1_000_000
-                    if timeout_ms is not None and elapsed > timeout_ms:
-                        c_ok.append(False)
-                        c_err.append(f"timeout: {elapsed} ms > budget {timeout_ms} ms")
-                        c_k.append([]); c_t.append([]); c_r.append([])  # noqa: E702
-                        c_ms.append(elapsed)
-                        continue
-                    c_ok.append(True); c_err.append("")  # noqa: E702
-                    c_k.append(out_k); c_t.append(out_t); c_r.append(out_r)  # noqa: E702
-                    c_ms.append(elapsed)
-                except Exception as exc:  # failure isolation
-                    elapsed = (time.monotonic_ns() - t0) // 1_000_000
-                    c_ok.append(False)
-                    c_err.append(f"{type(exc).__name__}: {exc}"[:500])
-                    c_k.append([]); c_t.append([]); c_r.append([])  # noqa: E702
-                    c_ms.append(elapsed)
-            if c_ok:
-                n = len(c_ok)
-                cum = int((time.monotonic() - t_start) * 1000)
-                cols = {
-                    "doc_id": pdf["doc_id"].to_numpy(),  # raw array: no index alignment
-                    "success": c_ok, "error_message": c_err,
-                    "o_kinds": c_k, "o_texts": c_t, "o_refs": c_r,
-                    "model_name": [model_name] * n,
-                    "content_hash": pdf["content_hash"].to_numpy(),
-                    "processing_time_ms": c_ms,
-                    "partition_id": [pid] * n, "cum_wall_ms": [cum] * n,
-                }
-                for name in passthrough:
-                    cols[name] = pdf[name].to_numpy()
-                yield pd.DataFrame(cols)
-
-    raw = src.mapInPandas(run, schema=raw_ddl)
-    spans_out = F.transform(
-        F.arrays_zip("o_kinds", "o_texts", "o_refs"),
-        lambda s, i: F.struct(
-            s["o_kinds"].alias("kind"),
-            s["o_texts"].alias("text"),
-            s["o_refs"].alias("media_ref"),
-            i.cast("int").alias("order"),
-        ),
-    )
-    full_text = F.array_join(
-        F.transform(
-            F.filter(
-                F.arrays_zip("o_kinds", "o_texts"),
-                lambda s: (s["o_kinds"] == F.lit("text")) & (s["o_texts"] != F.lit("")),
-            ),
-            lambda s: s["o_texts"],
-        ),
-        "\n",
-    )
-    return raw.select(
-        "doc_id", "success", "error_message",
-        spans_out.alias("spans_out"),
-        full_text.alias("full_text"),
-        "model_name", "content_hash", "processing_time_ms",
-        "partition_id", "cum_wall_ms", *passthrough,
-    )
+    return _output(out, _assemble_col(kcol, F.col("_x")), F.col("_x.err"),
+                   F.col("_x.ms"), F.col("_x.cum_wall_ms"), model_name,
+                   passthrough)
 
 
 def split_extraction_output(combined: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -131,22 +131,20 @@ def fan_out_small_input(df: DataFrame, min_partitions: int | None = None) -> Dat
     maxPartitionBytes bins): a run dir of hundreds of tiny part files
     used to pass a raw file-count check while the scan coalesced them
     into a handful of splits, serializing the per-row-expensive stage
-    (r7 advice, low). Only the under-target listing is stat'ed —
-    production-scale inputs short-circuit on the cheap count."""
+    (r7 advice, low). The stat loop stops as soon as the charged bytes
+    reach ``target * maxPartitionBytes`` (enough for ``target`` splits),
+    so at most ``ceil(target * maxPartitionBytes / openCostInBytes)``
+    files are stat'ed however long the listing is."""
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     files = df.inputFiles()
     if len(files) < target:
         return df.repartition(target)
     # many files != many scan partitions: estimate the packed count
-    conf = df.sparkSession.conf
-    try:
-        max_split = int(conf.get("spark.sql.files.maxPartitionBytes"))
-    except Exception:
-        max_split = 128 * 1024 * 1024
-    try:
-        open_cost = int(conf.get("spark.sql.files.openCostInBytes"))
-    except Exception:
-        open_cost = 4 * 1024 * 1024
+    # SQLConf's typed accessors: the string conf renders sizes with a
+    # unit suffix ("134217728b", "64m"), which int() cannot parse
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    max_split = conf.filesMaxPartitionBytes()
+    open_cost = conf.filesOpenCostInBytes()
     total = 0
     for f in files:
         p = f[5:] if f.startswith("file:") else f  # file:///p and file:/p both -> /p
@@ -155,6 +153,8 @@ def fan_out_small_input(df: DataFrame, min_partitions: int | None = None) -> Dat
         except OSError:
             return df  # non-local / unstatable source: trust the count
         total += max(sz, open_cost)
+        if total >= target * max_split:
+            return df  # packs into >= target splits whatever the rest is
     packed = max(1, -(-total // max_split))  # ceil
     if packed < target:
         return df.repartition(target)

@@ -149,9 +149,8 @@ def repetition_signals(df, text_col: str = "text", id_col: str = "doc_id",
     # docs with fewer than n tokens have NO n-gram (empty array) — a
     # truncated partial gram would score every one-word doc as
     # maximally repetitious (top_gram_frac 1.0). This intentionally
-    # DIFFERS from the dedup shinglers (with_word_shingles /
-    # with_word_gram_strings keep the partial gram so two identical
-    # short docs still pair up).
+    # DIFFERS from the dedup shingler (with_word_gram_strings keeps the
+    # partial gram so two identical short docs still pair up).
     # The split is STAGED under its own alias first: higher-order
     # functions are interpreted (no common-subexpression elimination),
     # so an inlined `slice(split(text), i+1, n)` lambda re-tokenizes the

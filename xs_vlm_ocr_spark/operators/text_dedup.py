@@ -7,29 +7,26 @@ Four families, each with the 100 TB plan shape in mind:
                      pair-count groupBy -> Jaccard filter. All JVM-side;
                      the join key is the shingle hash (long), so the
                      shuffle carries (hash, doc_id) pairs only.
-  * MinHash + LSH  — per-doc signature (vectorized pandas UDF over
-                     xxhash-mixed shingle hashes), banded into buckets;
-                     candidate pairs only within a bucket (the scale
-                     path: no all-pairs join ever materializes).
-  * SimHash        — 64-bit fingerprint via sign-sum of per-token
-                     hashes; near-dups = equal bands / small Hamming
-                     distance.
+  * MinHash + LSH  — per-doc signature as num_perm codegen'd min()
+                     aggregates over md5-derived gram hashes, banded
+                     into buckets; candidate pairs only within a bucket
+                     (the scale path: no all-pairs join ever
+                     materializes).
+  * SimHash        — 60-bit fingerprint via per-bit majority vote over
+                     md5-derived token hashes; near-dups = equal bands
+                     + exact Hamming verify.
 
-Determinism: all hashing is xxhash64 (Spark built-in) or a seeded
-splitmix64 in the UDF — no Python hash() anywhere.
+Every operator here runs entirely in Catalyst — no Python UDF. The
+MinHash and SimHash hash families are md5-derived so DuckDB reproduces
+every value (the driver contract value-checks both); the n-gram join
+key is Spark's built-in xxhash64. No Python hash() anywhere.
 """
 
 from __future__ import annotations
 
-import re
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from xs_vlm_ocr_spark.extract.pipeline import WS_CHARS
 
 # ------------------------------------------------------------ shingling
 
@@ -81,22 +78,6 @@ def with_distinct_gram_arrays(df: DataFrame, text_col: str = "text",
             "doc_id",
             F.filter(F.array_distinct(grams), lambda g: g != "").alias("_g"),
         )
-    )
-
-
-def with_word_shingles(df: DataFrame, text_col: str = "text", n: int = 3,
-                       id_col: str = "doc_id") -> DataFrame:
-    """Explode docs into word n-gram shingle hashes: (doc_id, shingle).
-
-    Tokens are lowercase whitespace words; the shingle key is
-    xxhash64(n-gram string) — an 8-byte join key instead of the string.
-    """
-    # no trailing .distinct(): array_distinct already dedups grams per
-    # doc, so (doc_id, shingle) is unique — a row-level distinct here
-    # would add a full shuffle to every consumer for nothing
-    return (
-        with_word_gram_strings(df, text_col, n, id_col)
-        .select("doc_id", F.xxhash64("g").alias("shingle"))
     )
 
 
@@ -248,8 +229,9 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", n: int = 3,
 
 def with_word_gram_strings(df: DataFrame, text_col: str = "text", n: int = 3,
                            id_col: str = "doc_id") -> DataFrame:
-    """Like with_word_shingles but keeps the gram STRING (doc_id, g) —
-    for operators whose hashing must be oracle-portable (md5).
+    """Explode docs into their distinct word n-gram STRINGS (doc_id, g)
+    — tokens are lowercase pinned-class whitespace words; hashing is
+    left to the consumer (md5 where it must be oracle-portable).
 
     Docs with fewer than n tokens yield ONE truncated partial gram —
     intentional for dedup/contamination: two identical short docs (or a
@@ -309,7 +291,7 @@ def minhash_band_index(df: DataFrame, text_col: str = "text",
 
     ``persist=True`` caches the signature aggregate (worth it when the
     returned index feeds BOTH sides of a join, as in
-    ``minhash_lsh_pairs_portable``); pass ``persist=False`` for
+    ``minhash_lsh_pairs``); pass ``persist=False`` for
     single-consumer builds (the probe side of ``minhash_probe_index``)
     so long-running ingestion sessions don't accumulate corpus-scale
     signature caches.
@@ -408,31 +390,28 @@ def _sig_est(num_perm: int):
     )
 
 
-def minhash_lsh_pairs_portable(df: DataFrame, text_col: str = "text",
-                               id_col: str = "doc_id", num_perm: int = 16,
-                               bands: int = 4, n: int = 3) -> DataFrame:
-    """Oracle-portable banded MinHash LSH — ALL JVM-side, no Python.
+def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
+                      id_col: str = "doc_id", num_perm: int = 16,
+                      bands: int = 4, n: int = 3) -> DataFrame:
+    """Banded MinHash LSH near-dup pairs — ALL JVM-side, no Python.
 
-    Identical algorithm to minhash_lsh_pairs (signature -> bands ->
-    bucket equi-join -> per-pair Jaccard estimate), but every hash is
-    md5-derived so DuckDB can reproduce the exact values (see
-    ``minhash_band_index`` for the hash construction):
+    signature -> bands -> bucket equi-join -> per-pair Jaccard estimate,
+    with every hash md5-derived so DuckDB reproduces the exact values
+    (see ``minhash_band_index`` for the hash construction):
 
       pairs    = docs sharing any (band, bucket), a < b
       est      = fraction of equal signature positions
 
-    Trade-off vs the default: num_perm md5 calls per gram instead of one
-    vectorized xxhash pipeline — heavier per row but fully codegen'd
-    (often competitive with the Arrow round-trip at moderate num_perm).
-    The pandas-UDF path stays the high-num_perm default; THIS variant is
-    what the driver contract value-checks end-to-end.
+    Candidates come only from the single-key bucket join — never
+    all-pairs.
+    This is the operator the driver contract value-checks end-to-end.
     """
     banded = minhash_band_index(df, text_col, id_col, num_perm, bands, n)
     return _lsh_pairs_from_banded(banded, num_perm)
 
 
 def _lsh_pairs_from_banded(banded: DataFrame, num_perm: int) -> DataFrame:
-    """The LSH candidate self-join shared by minhash_lsh_pairs_portable
+    """The LSH candidate self-join shared by minhash_lsh_pairs
     (fresh signatures) and minhash_pairs_from_index (precomputed or
     committed band rows): docs sharing any bucket, a < b, one estimate
     per pair."""
@@ -583,154 +562,14 @@ def minhash_probe_index(new_docs: DataFrame | None, index: DataFrame,
     )
 
 
-# ------------------------------------------------------------- MinHash/LSH
+def simhash_near_pairs(df: DataFrame, text_col: str = "text",
+                       id_col: str = "doc_id", max_hamming: int = 3,
+                       bands: int = 4, n_bits: int = 60) -> DataFrame:
+    """SimHash near-pair detection — ALL JVM-side, no Python.
 
-_MERSENNE = (1 << 61) - 1
-
-
-def _perm_params(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
-    rng = np.random.RandomState(seed)
-    a = rng.randint(1, _MERSENNE, size=num_perm, dtype=np.uint64)
-    b = rng.randint(0, _MERSENNE, size=num_perm, dtype=np.uint64)
-    return a, b
-
-
-def _splitmix64(x: np.ndarray) -> np.ndarray:
-    x = (x + np.uint64(0x9E3779B97F4A7C15)) & np.uint64(0xFFFFFFFFFFFFFFFF)
-    z = x
-    z = ((z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)) & np.uint64(0xFFFFFFFFFFFFFFFF)
-    z = ((z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)) & np.uint64(0xFFFFFFFFFFFFFFFF)
-    return z ^ (z >> np.uint64(31))
-
-
-_WS_SPLIT = re.compile(f"[{WS_CHARS}]+")
-
-
-def _tokenize(text: str) -> list[str]:
-    """Python mirror of the JVM tokenizer
-    ``split(lower(trim(text)), WS_RE)``: trim strips ASCII spaces only,
-    the split class is the pinned WS_CHARS, and Spark's split (limit -1)
-    KEEPS leading/trailing empty tokens — so does re.split. Pinned
-    against the JVM by tests/test_text_dedup.py (exotic-whitespace gram
-    parity): the default and portable-twin paths differ only in hash
-    family for the tested character classes.
-
-    Case-mapping caveat: Python ``str.lower()`` is locale-independent;
-    Java ``toLowerCase`` uses the JVM default locale, which diverges on
-    locale-special mappings (tr/az dotted-I: 'I' -> 'ı'). session.py
-    pins the JVM to -Duser.language=en so both sides use the root-like
-    mapping; parity on locale-sensitive codepoints is only guaranteed
-    under that pin."""
-    return _WS_SPLIT.split(text.strip(" ").lower())
-
-
-def _doc_grams(text: str, n: int) -> list[str]:
-    """Word n-grams over ``_tokenize`` — the same gram strings (and the
-    same ``g != ''`` filter) as the JVM ``with_word_gram_strings``;
-    parity pinned by tests/test_text_dedup.py."""
-    toks = _tokenize(text)
-    if len(toks) < n:
-        grams = [" ".join(toks)] if toks else []
-    else:
-        grams = [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
-    return [g for g in grams if g]
-
-
-def _doc_shingle_hashes(text: str, n: int) -> np.ndarray:
-    import hashlib
-
-    grams = _doc_grams(text, n)
-    if not grams:
-        return np.zeros(0, dtype=np.uint64)
-    # blake2b (C speed, deterministic, unsalted) -> 8-byte gram keys
-    b2b, from_bytes = hashlib.blake2b, int.from_bytes
-    out = np.fromiter(
-        (from_bytes(b2b(g.encode("utf-8"), digest_size=8).digest(), "little")
-         for g in grams),
-        dtype=np.uint64, count=len(grams),
-    )
-    return np.unique(out)
-
-
-def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                       num_perm: int = 64, shingle_n: int = 3, seed: int = 42) -> DataFrame:
-    """(doc_id, sig: array<bigint>) — vectorized pandas UDF, Arrow batched."""
-    from xs_vlm_ocr_spark.operators.skew import fan_out_small_input
-
-    df = fan_out_small_input(df)
-    a, b = _perm_params(num_perm, seed)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            sigs = []
-            for text in pdf[text_col]:
-                hs = _doc_shingle_hashes(text or "", shingle_n)
-                if hs.size == 0:
-                    sigs.append([0] * num_perm)
-                    continue
-                mixed = _splitmix64(hs)
-                # (a*h + b) mod p, min over shingles, per permutation
-                vals = (np.outer(a, mixed) + b[:, None]) % np.uint64(_MERSENNE)
-                sigs.append([int(v) for v in vals.min(axis=1).astype(np.int64)])
-            yield pd.DataFrame({"doc_id": pdf[id_col], "sig": sigs})
-
-    src = df.select(F.col(id_col).cast("string").alias(id_col), F.col(text_col))
-    return src.mapInPandas(run, schema=f"{id_col} string, sig array<bigint>")
-
-
-def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                      num_perm: int = 64, bands: int = 16, shingle_n: int = 3,
-                      seed: int = 42) -> DataFrame:
-    """Candidate near-dup pairs via banded MinHash LSH.
-
-    bands x rows = num_perm; docs sharing any band bucket become a
-    candidate pair, then the full signatures estimate Jaccard. The only
-    shuffle is the (band_key -> doc) groupBy-join — never all-pairs.
-    """
-    assert num_perm % bands == 0
-    rows = num_perm // bands
-    sigs = minhash_signatures(df, text_col, id_col, num_perm, shingle_n, seed)
-    banded = sigs.select(
-        "doc_id", "sig",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.struct(
-                    i.alias("band"),
-                    F.xxhash64(F.to_json(F.slice("sig", i * rows + 1, rows)), i).alias("bucket"),
-                ),
-            )
-        ).alias("bb"),
-    ).select("doc_id", "sig", "bb.band", "bb.bucket").persist()
-    # persist: both sides of the self-join share the pandas-UDF
-    # signature stage — without it the signatures compute twice
-    a = banded.select(F.col("doc_id").alias("a"), F.col("sig").alias("siga"), "band", "bucket")
-    b = banded.select(F.col("doc_id").alias("b"), F.col("sig").alias("sigb"), "band", "bucket")
-    est = F.aggregate(
-        F.zip_with("siga", "sigb", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    ) / F.lit(num_perm)
-    # estimate per band collision (cheap zip_with, <= `bands` dupes per
-    # pair), then dedup on the narrow (a, b, est) — shuffling 64-long
-    # signature arrays through a wide distinct costs far more
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("a") < F.col("b"))
-        .withColumn("est_jaccard", est)
-        .groupBy("a", "b")
-        .agg(F.first("est_jaccard").alias("est_jaccard"))
-    )
-
-
-def simhash_near_pairs_portable(df: DataFrame, text_col: str = "text",
-                                id_col: str = "doc_id", max_hamming: int = 3,
-                                bands: int = 4, n_bits: int = 60) -> DataFrame:
-    """Oracle-portable SimHash near-pair detection — ALL JVM-side.
-
-    Same algorithm as simhash_near_pairs (per-token hash -> per-bit
-    majority vote -> pigeonhole banding -> exact Hamming verify) with
-    md5-derived 60-bit token hashes so DuckDB reproduces every value:
+    Per-token hash -> per-bit majority vote -> pigeonhole banding ->
+    exact Hamming verify, with md5-derived 60-bit token hashes so DuckDB
+    reproduces every value:
 
       h(tok)  = CAST(first 15 hex chars of md5(tok) AS BIGINT)  (60 bits)
       bit j   = (h >> j) & 1 over the doc's DISTINCT tokens
@@ -740,8 +579,7 @@ def simhash_near_pairs_portable(df: DataFrame, text_col: str = "text",
                 exact chunk
       verify  = bit_count(fp_a XOR fp_b) <= max_hamming
 
-    Requires max_hamming <= bands - 1 for completeness (same contract
-    as the default operator)."""
+    Requires max_hamming <= bands - 1 for completeness."""
     assert n_bits % bands == 0 and max_hamming <= bands - 1
     width = n_bits // bands
     toks = with_word_gram_strings(df, text_col, n=1, id_col=id_col)
@@ -785,71 +623,6 @@ def simhash_near_pairs_portable(df: DataFrame, text_col: str = "text",
                       "band", "chunk")
     b = chunks.select(F.col("doc_id").alias("b"), F.col("simhash").alias("hb"),
                       "band", "chunk")
-    ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    return (
-        a.join(b, ["band", "chunk"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", ham.alias("hamming"))
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-# ---------------------------------------------------------------- SimHash
-
-def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-              out_col: str = "simhash") -> DataFrame:
-    """64-bit SimHash via a vectorized (numpy) pandas UDF: per unique
-    token an FNV-1a/splitmix64 hash; per-bit majority vote packed into a
-    long. One Arrow batch in/out — no per-row Python objects."""
-    from xs_vlm_ocr_spark.operators.skew import fan_out_small_input
-
-    df = fan_out_small_input(df)
-
-    @F.pandas_udf("long")
-    def sim(texts: pd.Series) -> pd.Series:
-        shifts = np.arange(64, dtype=np.uint64)
-        out = np.empty(len(texts), dtype=np.int64)
-        for i, t in enumerate(texts):
-            hs = _doc_shingle_hashes(t or "", 1)  # unique token hashes
-            if hs.size == 0:
-                out[i] = 0
-                continue
-            mixed = _splitmix64(hs)
-            bits = (mixed[:, None] >> shifts) & np.uint64(1)  # (n_tok, 64)
-            votes = bits.sum(axis=0) * 2 > hs.size            # majority per bit
-            out[i] = (votes.astype(np.uint64) << shifts).sum().astype(np.int64)
-        return pd.Series(out)
-
-    return df.withColumn(out_col, sim(F.col(text_col)))
-
-
-def simhash_near_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                       max_hamming: int = 3, bands: int = 4) -> DataFrame:
-    """Near-dup pairs by SimHash banding: split the 64-bit hash into
-    `bands` chunks; by pigeonhole, any pair within max_hamming <= bands-1
-    shares at least one exact chunk -> equi-join per chunk, verify with
-    exact popcount Hamming distance."""
-    width = 64 // bands
-    sh = simhash64(df, text_col, id_col)
-    chunks = sh.select(
-        F.col(id_col).alias("doc_id"), "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright(F.col("simhash"), i * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("chunk"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("bc"),
-    ).select("doc_id", "simhash", "bc.band", "bc.chunk")
-    a = chunks.select(F.col("doc_id").alias("a"), F.col("simhash").alias("ha"), "band", "chunk")
-    b = chunks.select(F.col("doc_id").alias("b"), F.col("simhash").alias("hb"), "band", "chunk")
     ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
     return (
         a.join(b, ["band", "chunk"])

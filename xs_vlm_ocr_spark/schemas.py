@@ -116,11 +116,3 @@ STRATEGIES_SCHEMA = T.StructType(
         T.StructField("enabled", T.BooleanType(), False),
     ]
 )
-
-# DDL strings (for mapInPandas/applyInPandas schema= args)
-EXTRACTION_OUTPUT_DDL = (
-    "doc_id string, success boolean, error_message string, "
-    "spans_out array<struct<kind:string,text:string,media_ref:string,order:int>>, "
-    "full_text string, model_name string, content_hash string, "
-    "processing_time_ms long, partition_id int, cum_wall_ms long"
-)

@@ -11,7 +11,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 
 def get_spark(
@@ -40,9 +40,9 @@ def get_spark(
         # one socket, default GC threads (=cores) fight the extraction
         # workers for the memory bus (measured ~25% stage time)
         # user.language pin: Java toLowerCase is default-locale-sensitive
-        # (tr/az dotted-I), Python str.lower() is not — the MinHash/gram
-        # tokenizer parity (text_dedup._tokenize) assumes a root-like
-        # locale on the JVM side
+        # (tr/az dotted-I), Python str.lower() is not — the gram
+        # tokenizer's parity with its Python spec (tests/oracles.py)
+        # assumes a root-like locale on the JVM side
         .config(
             "spark.driver.extraJavaOptions",
             f"-XX:ParallelGCThreads={min(8, cores)} -XX:ConcGCThreads=2"

@@ -11,7 +11,7 @@ is unavailable (reference MainWindow.cpp:960-975, C7).
 
 The extractor dispatch table (reference engine-string dispatch,
 MainWindow.cpp:846-882) is the Python REGISTRY below: engine name ->
-single-doc extraction callable, wrapped by operators.extraction.
+bypass-convention extraction callable, wrapped by operators.extraction.
 """
 
 from __future__ import annotations
@@ -21,22 +21,18 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xs_vlm_ocr_spark.extract.pipeline import _norm, extract_doc
+from xs_vlm_ocr_spark.extract.pipeline import extract_doc_bypass
 from xs_vlm_ocr_spark.schemas import STRATEGIES_SCHEMA
 
-# engine-name -> single-doc extractor (spans -> ordered out-spans).
-# "main_content_v1" is the full pipeline; the others expose the stages
-# individually (useful for stage-level golden tests and A/B strategies).
-# Whitespace normalization everywhere is the pinned-class _norm (the
-# engine-wide contract — see extract.pipeline.WS_CHARS).
+# engine name -> bypass-convention extractor
+# (codes, offs, heavy, blanks) -> (o_texts, o_src), run by
+# operators.extraction on the Arrow-bypass plan. "main_content_v1" is
+# the full pipeline. "passthrough" maps to None: it has no Python
+# extractor — offset order, kind map and whitespace normalization run
+# as one Catalyst expression (operators.extraction).
 REGISTRY = {
-    "main_content_v1": extract_doc,
-    "passthrough": lambda spans: [
-        {"kind": "media" if s["kind"] == "media" else "text",
-         "text": "" if s["kind"] == "media" else _norm(s["text"] or ""),
-         "media_ref": s["media_ref"] or "", "order": i}
-        for i, s in enumerate(sorted(spans, key=lambda s: s["offset"]))
-    ],
+    "main_content_v1": extract_doc_bypass,
+    "passthrough": None,
 }
 
 DEFAULT_CONFIG = {

@@ -5,7 +5,7 @@ once, append to history (reference src/managers/ClipboardManager.cpp:
 69-96 change-detection; history append HistoryManager.cpp:275-328).
 Spark restatement: a file-source Structured Stream over the docs
 directory; each micro-batch runs the SAME batch extraction operator
-(mapInPandas works unchanged on streaming DataFrames), and the sink is
+(a scalar pandas UDF works unchanged on streaming DataFrames), and the sink is
 ``foreachBatch`` -> content-hash anti-join -> checkpointed append, so
 replayed micro-batches are idempotent (at-least-once delivery x
 idempotent sink = effectively exactly-once, the Iceberg pattern).
