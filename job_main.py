@@ -207,10 +207,15 @@ def main() -> None:
                 summary["clusters"] = 0
                 summary["duplicate_docs"] = 0
             else:
-                # ATOMIC export: write-to-temp + rename — a crash
-                # mid-write used to leave a partial/empty cluster dir,
-                # the one non-atomic write on the CLI surface (r7
-                # verdict Wrong #1). Counts come from the committed
+                # ATOMIC export: write to a temp dir, move the old
+                # export aside, rename the temp into place, then delete
+                # the aside copy — a crash at any point leaves a
+                # complete export at dest or, between the two renames,
+                # the previous one at the aside path (never a partial
+                # dir). Directory renames are atomic on POSIX local
+                # filesystems only; an object store (S3/GCS) has no
+                # rename and needs a catalog commit instead (an Iceberg/
+                # Delta table swap). Counts come from the committed
                 # export (an Observation can't carry the COUNT DISTINCT
                 # the cluster count needs).
                 import os
@@ -218,14 +223,20 @@ def main() -> None:
                 import uuid as _uuid
 
                 dest = args.emit_clusters.rstrip("/")
-                tmp = f"{dest}.tmp.{_uuid.uuid4().hex[:8]}"
+                tag = _uuid.uuid4().hex[:8]
+                tmp, aside = f"{dest}.tmp.{tag}", f"{dest}.old.{tag}"
                 try:
                     clusters.write.mode("overwrite").parquet(tmp)
                     if os.path.isdir(dest):
-                        shutil.rmtree(dest)
+                        os.replace(dest, aside)
                     os.replace(tmp, dest)  # atomic flip
+                except BaseException:
+                    if os.path.isdir(aside) and not os.path.exists(dest):
+                        os.replace(aside, dest)  # put the previous one back
+                    raise
                 finally:
                     shutil.rmtree(tmp, ignore_errors=True)
+                shutil.rmtree(aside, ignore_errors=True)
                 emitted = spark.read.parquet(dest)
                 summary["clusters"] = emitted.select("cluster_id").distinct().count()
                 summary["duplicate_docs"] = emitted.filter("is_canonical = 0").count()

@@ -100,6 +100,122 @@ def test_crash_before_commit_is_invisible(spark, tmp_path_factory):
     assert job.read_results(spark).count() == 30
 
 
+def test_staging_deleted_once_run_commits(spark, tmp_path_factory):
+    """A run's staged copy is deleted once its results and lineage
+    appends commit; a crash after staging leaves it behind, and the
+    rerun commits the same table a single clean run would."""
+    import os
+
+    out = str(tmp_path_factory.mktemp("job_staging"))
+    docs = gen_docs_df(spark, 30)
+    job = ExtractionJob(out)
+    job.run(spark, docs, run_id="crashed", fail_after_staging=True)
+    assert os.path.isdir(os.path.join(out, "staging", "crashed"))
+
+    job.run(spark, docs, run_id="clean")
+    assert not os.path.exists(os.path.join(out, "staging", "clean"))
+    assert job.read_results(spark).count() == 30
+
+
+def _observed_runtime_empty_write(spark, path):
+    """Observed count of a write whose join side is empty only at run
+    time: AQEPropagateEmptyRelation would replan the join as an empty
+    relation and drop the CollectMetrics node with it."""
+    import uuid
+
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation(f"probe_{uuid.uuid4().hex}")
+    left = spark.range(50).observe(obs, F.count(F.lit(1)).alias("n"))
+    right = spark.range(50).filter(F.col("id") > 100)
+    left.join(right, "id").write.mode("overwrite").parquet(path)
+    return obs.get["n"]
+
+
+@pytest.mark.parametrize("original", [
+    None, "org.apache.spark.sql.catalyst.optimizer.EliminateLimits",
+])
+def test_observation_safe_aqe_is_reentrant(spark, tmp_path, original):
+    """Overlapping guarded writes on ONE session, nested and from two
+    threads whose holds interleave (the first leaves while the second
+    still writes): every observed write gets its count, and the conf
+    ends equal to its original value, unset included."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from xs_vlm_ocr_spark.job import _AQE_RULE_KEY, _observation_safe_aqe
+
+    if original is None:
+        spark.conf.unset(_AQE_RULE_KEY)
+    else:
+        spark.conf.set(_AQE_RULE_KEY, original)
+    try:
+        # precondition: unguarded, this probe really loses its count
+        with pytest.raises(Exception):
+            _observed_runtime_empty_write(spark, str(tmp_path / "bare"))
+
+        with _observation_safe_aqe(spark):
+            assert _observed_runtime_empty_write(spark, str(tmp_path / "n0")) == 50
+            with _observation_safe_aqe(spark):
+                assert _observed_runtime_empty_write(spark, str(tmp_path / "n1")) == 50
+            assert _observed_runtime_empty_write(spark, str(tmp_path / "n2")) == 50
+        assert spark.conf.get(_AQE_RULE_KEY, None) == original
+
+        first_in, second_in, first_out = (threading.Event() for _ in range(3))
+
+        def first():
+            with _observation_safe_aqe(spark):
+                n = _observed_runtime_empty_write(spark, str(tmp_path / "t1"))
+                first_in.set()
+                assert second_in.wait(120)
+            first_out.set()
+            return n
+
+        def second():
+            assert first_in.wait(120)
+            with _observation_safe_aqe(spark):
+                second_in.set()
+                assert first_out.wait(120)
+                return _observed_runtime_empty_write(spark, str(tmp_path / "t2"))
+
+        with ThreadPoolExecutor(2) as pool:
+            f1, f2 = pool.submit(first), pool.submit(second)
+            assert (f1.result(), f2.result()) == (50, 50)
+        assert spark.conf.get(_AQE_RULE_KEY, None) == original
+    finally:
+        spark.conf.unset(_AQE_RULE_KEY)
+
+
+def test_observation_safe_aqe_holds_under_thread_churn(spark):
+    """More threads than cores entering and leaving the guard with a
+    short switch interval: inside every hold the rule is excluded (a
+    lost refcount update would let one holder restore the conf under
+    another), and the conf ends unset as it began."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from xs_vlm_ocr_spark.job import _AQE_RULE, _AQE_RULE_KEY, _observation_safe_aqe
+
+    def churn(_):
+        missing = 0
+        for _ in range(25):
+            with _observation_safe_aqe(spark):
+                missing += _AQE_RULE not in (spark.conf.get(_AQE_RULE_KEY, None) or "")
+        return missing
+
+    spark.conf.unset(_AQE_RULE_KEY)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(12) as pool:
+            futures = [pool.submit(churn, i) for i in range(12)]
+            assert [f.result(timeout=300) for f in futures] == [0] * 12
+    finally:
+        sys.setswitchinterval(interval)
+    assert spark.conf.get(_AQE_RULE_KEY, None) is None
+
+
 def test_idempotent_second_run_is_noop(spark, docs, tmp_path_factory):
     job = ExtractionJob(str(tmp_path_factory.mktemp("job_idem")))
     job.run(spark, docs)
@@ -154,8 +270,8 @@ def test_invalid_count_exact_under_skew_split(spark, tmp_path_factory):
     docs = spark.createDataFrame(tiny + giant + bad, DOCS_SCHEMA)
 
     # precondition: this corpus must actually trigger the skew branch
-    med, thr = doc_length_stats(docs, sample_fraction=1.0)
-    assert thr / med >= 10.0
+    st = doc_length_stats(docs, sample_fraction=1.0)
+    assert st.hot / st.median >= 10.0
 
     job = ExtractionJob(str(tmp_path_factory.mktemp("job_skew_inv")),
                         skew_sample_fraction=1.0)

@@ -85,6 +85,51 @@ def test_job_main_emit_clusters(spark, tmp_path, monkeypatch, capsys):
                   "--emit-clusters", cl_dir])
 
 
+def test_job_main_emit_clusters_replaces_existing_export(
+        spark, tmp_path, monkeypatch, capsys):
+    """An existing export at the --emit-clusters dest is moved aside,
+    swapped for the new one and then deleted; a failed swap puts the
+    previous export back. No temp or aside dir is left next to dest."""
+    import os
+
+    import pytest
+
+    from xs_vlm_ocr_spark.schemas import DOCS_SCHEMA
+
+    rows = [
+        {"doc_id": d,
+         "spans": [{"kind": "text", "text": " ".join(f"{d}{i:03d}" for i in range(80)),
+                    "media_ref": "", "offset": 0}]}
+        for d in ("a", "b")
+    ]
+    docs_dir = str(tmp_path / "docs")
+    cl_dir = str(tmp_path / "clusters")
+    spark.createDataFrame(rows, DOCS_SCHEMA).write.parquet(docs_dir)
+    spark.range(7).write.parquet(cl_dir)  # a stale export already there
+    argv = ["--input", docs_dir, "--output", str(tmp_path / "out"),
+            "--near-dup-threshold", "0.5", "--emit-clusters", cl_dir]
+
+    summary = _run_cli(monkeypatch, capsys, argv)
+    assert summary["clusters"] == 2
+    assert set(spark.read.parquet(cl_dir).columns) >= {"cluster_id", "is_canonical"}
+    assert sorted(os.listdir(tmp_path)) == ["clusters", "docs", "out"]
+    before = sorted(os.listdir(cl_dir))
+
+    real_replace = os.replace
+
+    def failing_swap(src, dst):
+        if dst == cl_dir and ".tmp." in str(src):
+            raise OSError("simulated failed swap")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", failing_swap)
+    with pytest.raises(OSError, match="simulated"):
+        _run_cli(monkeypatch, capsys, argv)
+    monkeypatch.setattr(os, "replace", real_replace)
+    assert sorted(os.listdir(cl_dir)) == before  # previous export back
+    assert sorted(os.listdir(tmp_path)) == ["clusters", "docs", "out"]
+
+
 def test_job_main_stream_mode(spark, tmp_path, monkeypatch, capsys):
     """--stream: the CLI ingests the input dir as a Structured Stream —
     one committed run per micro-batch, availableNow drain, and the

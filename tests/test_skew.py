@@ -3,12 +3,17 @@ cost), byte-length range partitioning must cut the straggler ratio
 (max/median partition wall_ms) vs naive round-robin partitioning, and
 the salted aggregation must match the plain one."""
 
+import math
+import re
+from collections import Counter
+
 import pyspark.sql.functions as F
 import pytest
 
 from xs_vlm_ocr_spark.corpus import gen_docs_df
 from xs_vlm_ocr_spark.operators.extraction import extract_spans, split_extraction_output
 from xs_vlm_ocr_spark.operators.skew import (
+    doc_length_stats,
     repartition_by_doc_length,
     salted_group_count,
     with_byte_len,
@@ -87,6 +92,36 @@ def test_min_partitions_floor_single_shuffle(spark, skewed_docs):
     plan = skewed._jdf.queryExecution().executedPlan().toString()
     plan = plan.split("== Initial Plan ==")[0]
     assert plan.count("RoundRobinPartitioning") == 2, plan
+
+
+def test_doc_length_stats_exact_at_full_sample(spark, skewed_docs):
+    """At sample_fraction=1.0 the row count and byte total are exact."""
+    st = doc_length_stats(skewed_docs, sample_fraction=1.0)
+    total = with_byte_len(skewed_docs).agg(F.sum("byte_len")).first()[0]
+    assert (st.rows, st.bytes) == (N_DOCS, total)
+    assert 0 < st.median < st.hot
+
+
+def test_hot_stream_sized_by_estimated_rows(spark, skewed_docs):
+    """The cold stream round-robins over P partitions and the hot stream
+    over k = min(P, ceil(rows * (1 - 0.99 + 0.02))): exactly two
+    round-robin exchanges, and no partition holds two hot docs."""
+    st = doc_length_stats(skewed_docs, sample_fraction=1.0)
+    p = 2 * N_PARTS
+    k = min(p, math.ceil(N_DOCS * 3 / 100))
+    assert k < p  # the hot stream really is sized apart from P
+    out = repartition_by_doc_length(skewed_docs, p, stats=st)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    parts = re.findall(r"RoundRobinPartitioning\((\d+)\)", plan)
+    assert sorted(map(int, parts)) == sorted([p, k]), plan
+
+    rows = with_byte_len(out).select(
+        F.spark_partition_id().alias("pid"), "byte_len"
+    ).collect()
+    assert len(rows) == N_DOCS
+    hot = Counter(r["pid"] for r in rows if r["byte_len"] >= st.hot)
+    assert hot and max(hot.values()) == 1, hot
 
 
 def test_salted_group_count_matches_plain(spark, skewed_docs):

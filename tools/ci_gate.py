@@ -22,7 +22,13 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # package itself, repo-root entry modules and the test/bench toolchain
 ALLOWED_IMPORTS = {"pyspark", "numpy", "pandas", "pyarrow", "duckdb",
                    "xs_vlm_ocr_spark", "py4j", "pytest", "hypothesis",
-                   "__spark_entry__", "job_main", "tools", "bench", "oracles"}
+                   "__spark_entry__", "job_main", "tools", "bench", "oracles",
+                   "perfbench"}
+# real import statements only ("import x", "from x[.y] import ..."): a
+# docstring line that merely starts with "from" or "import" is prose
+IMPORT_RE = re.compile(
+    r"^\s*import\s+(\w+)|^\s*from\s+(\w+)[\w.]*\s+import\b", re.M
+)
 # secrets / internal-endpoint shapes that must never appear
 LEAK_RES = [
     r"(?i)aws_secret|aws_access_key_id",
@@ -72,9 +78,8 @@ def leak_grep() -> bool:
                         bad.append(
                             f"{path}: scale anti-pattern '{m.group(0)}'"
                         )
-            for m in re.finditer(r"^\s*(?:from|import)\s+([a-zA-Z_][\w]*)",
-                                 src, re.M):
-                mod = m.group(1)
+            for m in IMPORT_RE.finditer(src):
+                mod = m.group(1) or m.group(2)
                 if mod not in ALLOWED_IMPORTS and mod not in sys.stdlib_module_names:
                     bad.append(f"{path}: disallowed import '{mod}'")
     for b in bad:

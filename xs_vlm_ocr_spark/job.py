@@ -15,7 +15,11 @@ table equals the single-run result (tested in tests/test_resume.py).
 
 from __future__ import annotations
 
+import contextlib
+import math
 import os
+import shutil
+import threading
 import uuid
 from datetime import datetime, timezone
 
@@ -35,33 +39,49 @@ from xs_vlm_ocr_spark.schemas import LINEAGE_SCHEMA
 from xs_vlm_ocr_spark.table_io import REWRITE_PREFIXES, CheckpointedTable
 
 
-import contextlib
+# ONE hold per session, shared by every overlapping observed write:
+# session -> [refcount, conf value before the first entrant]
+_AQE_LOCK = threading.Lock()
+_AQE_HOLDS: dict[int, list] = {}
+_AQE_RULE_KEY = "spark.sql.adaptive.optimizer.excludedRules"
+_AQE_RULE = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
 
 
 @contextlib.contextmanager
 def _observation_safe_aqe(spark: SparkSession):
-    """Exclude AQEPropagateEmptyRelation for ONE Observation-driving
-    write: when AQE replans a runtime-empty subtree as a LocalRelation
-    it drops the CollectMetrics node and the Observation completes with
-    a schema-less row — the observed counts are silently lost
-    (reproduced on Spark 4.1.2). Keeping the node costs nothing: by the
-    time AQE learns a stage is empty the observed stage already ran.
-    Session-global conf toggle — NOT re-entrant on a shared session
-    (see ExtractionJob.run's concurrency note)."""
-    _rule_key = "spark.sql.adaptive.optimizer.excludedRules"
-    _aqe_rule = ("org.apache.spark.sql.execution.adaptive."
-                 "AQEPropagateEmptyRelation")
-    _old_rules = spark.conf.get(_rule_key, None)
-    spark.conf.set(
-        _rule_key, f"{_old_rules},{_aqe_rule}" if _old_rules else _aqe_rule
-    )
+    """Exclude AQEPropagateEmptyRelation for Observation-driving writes:
+    when AQE replans a runtime-empty subtree as a LocalRelation it drops
+    the CollectMetrics node and the Observation completes with a
+    schema-less row — the observed counts are silently lost (reproduced
+    on Spark 4.1.2). Keeping the node costs nothing: by the time AQE
+    learns a stage is empty the observed stage already ran.
+
+    Re-entrant: the conf is session-global, so overlapping holders on
+    one session (nested, or from several threads) share one refcounted
+    hold. The first entrant appends the rule and saves the prior value;
+    the last one to leave restores it (unset included). A holder never
+    restores a value while another write still needs the rule. Other
+    queries on the session also run with the rule excluded while any
+    hold is open."""
+    key = id(spark)
+    with _AQE_LOCK:
+        hold = _AQE_HOLDS.get(key)
+        if hold is None:
+            old = spark.conf.get(_AQE_RULE_KEY, None)
+            spark.conf.set(_AQE_RULE_KEY, f"{old},{_AQE_RULE}" if old else _AQE_RULE)
+            hold = _AQE_HOLDS[key] = [0, old]
+        hold[0] += 1
     try:
         yield
     finally:
-        if _old_rules is None:
-            spark.conf.unset(_rule_key)
-        else:
-            spark.conf.set(_rule_key, _old_rules)
+        with _AQE_LOCK:
+            hold[0] -= 1
+            if hold[0] == 0:
+                del _AQE_HOLDS[key]
+                if hold[1] is None:
+                    spark.conf.unset(_AQE_RULE_KEY)
+                else:
+                    spark.conf.set(_AQE_RULE_KEY, hold[1])
 
 
 def stamp_results(results: DataFrame, run_id: str, committed_at: datetime,
@@ -239,16 +259,28 @@ class ExtractionJob:
         whole input, a second full pass at 100 TB."""
         from xs_vlm_ocr_spark.operators.skew import doc_length_stats
 
-        n_parts = target_partitions or spark.sparkContext.defaultParallelism * 3
         # Skew stats come from the RAW subtree, BELOW the observe node
-        # (the quantile pass is an action — computing it on the
+        # (the stats pass is an action — computing it on the
         # post-anti-join plan would run the whole upstream twice, and it
-        # must never execute the Observation's plan: approxQuantile over
+        # must never execute the Observation's plan: an aggregate over
         # an empty sample — routine for a small batch at 5% — completes
         # the Observation with an EMPTY metrics row, and Observation
         # locks its first result, so obs.get would raise forever after).
         stats = doc_length_stats(valid_docs(docs),
                                  sample_fraction=self.skew_sample_fraction)
+        # Extraction partitions follow the estimated data volume, floored
+        # at the core count: one scan split's worth of span bytes per
+        # task (100 TB -> ~745k tasks at 128 MB, still >> cores). A fixed
+        # multiple of the cores would schedule mostly near-empty Python
+        # tasks on a small batch, and every Python task pays a fixed
+        # worker setup (~250 ms measured on 4 cores) whatever its row
+        # count. The skew split's hot stream is sized separately
+        # (repartition_by_doc_length).
+        max_split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        n_parts = target_partitions or max(
+            spark.sparkContext.defaultParallelism,
+            math.ceil(stats.bytes / max_split),
+        )
         if observation is not None:
             docs = docs.observe(
                 observation,
@@ -327,13 +359,15 @@ class ExtractionJob:
         file-count growth across long-lived daily ingests; a crash
         mid-compaction leaves every pre-policy snapshot committed.
 
-        NOT re-entrant on a shared SparkSession: the staging write
-        toggles the session-global AQE excludedRules conf around itself
-        (see below), so a concurrent query on the same session would run
-        with AQEPropagateEmptyRelation disabled during that window and
-        the finally-restore would stomp a concurrent modification. The
-        driver model is one job per session; give concurrent callers
-        their own session (newSession())."""
+        The staging write excludes one AQE rule through the
+        session-global excludedRules conf (see below). That guard is
+        refcounted per session, so overlapping runs on one session each
+        keep their invalid counts and the conf is restored once the last
+        one leaves; other queries on the session run with the rule
+        excluded meanwhile. Runs into the SAME out_dir are not
+        coordinated: the manifest commits are read-modify-write. The
+        staged copy is deleted once the results and lineage appends
+        have committed."""
         from pyspark.sql import Observation
 
         run_id = run_id or uuid.uuid4().hex[:12]
@@ -398,6 +432,10 @@ class ExtractionJob:
             )
             lineage = lineage.unionByName(inv_row)
         self.lineage.append(lineage, run_id)
+        # both appends committed: nothing reads the staged copy again (a
+        # crash before this line leaves it behind, like any torn write;
+        # the rerun stages under its own run_id)
+        shutil.rmtree(staging, ignore_errors=True)
         if self.near_dup_threshold is not None:
             self.sync_near_dup_index(spark)
         if self.heldout_dir is not None:

@@ -4,11 +4,16 @@ Doc cost is dominated by byte length, which is log-uniform over ~4
 orders of magnitude with a 1% hot tail — random hash partitioning mixes
 giants with dwarves and produces straggler tasks. Mitigations:
 
-  * ``repartition_by_doc_length``: range-partition on (byte_len, salt)
-    with partitions >> cores, so same-cost docs land together, the few
-    giant docs isolate into their own small tasks, and the scheduler's
-    work-stealing over many uniform tasks bounds the tail. The salt
-    (deterministic hash of doc_id) spreads equal-length ties.
+  * ``repartition_by_doc_length``: split the batch at the sampled hot
+    quantile of byte_len. The cold stream round-robins over P
+    partitions, sized by the estimated data volume
+    (``max(cores, est_bytes / maxPartitionBytes)``, see
+    job.ExtractionJob.plan), so the scheduler balances many uniform
+    tasks. The hot stream round-robins over its own
+    ``k = min(P, ceil(est_rows * (1 - hot_quantile + 0.02)))``
+    partitions — about one giant doc per task within the sketch's rank
+    error, and no empty Python tasks (each costs a fixed worker setup
+    whatever its row count).
   * ``salted_group_count``: two-phase (salted partial + final) aggregation
     for hot grouping keys.
   * AQE skew-join splitting is enabled session-wide
@@ -21,7 +26,9 @@ vs. naive partitioning on the skewed corpus.
 
 from __future__ import annotations
 
+import math
 import os
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -39,23 +46,45 @@ def with_byte_len(docs: DataFrame) -> DataFrame:
     )
 
 
+class DocLengthStats(NamedTuple):
+    """Sampled byte-length statistics; ``rows`` and ``bytes`` are
+    estimates for the whole input (sample totals / sample_fraction)."""
+    median: float
+    hot: float
+    rows: int
+    bytes: int
+
+
+# relative rank error of the quantile sketch (percentile_approx
+# accuracy = 1 / error); the hot stream's size allows for the same slack
+_RANK_ERROR = 0.02
+
+
 def doc_length_stats(docs: DataFrame, sample_fraction: float = 0.05,
-                     hot_quantile: float = 0.99, seed: int = 42) -> tuple[float, float]:
-    """(median, hot-quantile) byte length from a seeded sample — one
-    cheap pass over a fraction of the data instead of a full scan.
-    Returns (0, 0) on an (effectively) empty input."""
+                     hot_quantile: float = 0.99, seed: int = 42) -> DocLengthStats:
+    """(median, hot-quantile) byte length plus the estimated row count
+    and byte total, from ONE aggregate over a seeded sample — one cheap
+    pass over a fraction of the data instead of a full scan. Returns
+    all zeros on an (effectively) empty input."""
     sample = with_byte_len(docs.sample(fraction=sample_fraction, seed=seed))
-    qs = sample.approxQuantile("byte_len", [0.5, hot_quantile], 0.02)
-    if not qs or qs[0] is None:
-        return 0.0, 0.0
-    return qs[0], qs[1]
+    r = sample.agg(
+        F.percentile_approx("byte_len", [0.5, hot_quantile],
+                            round(1 / _RANK_ERROR)).alias("q"),
+        F.count(F.lit(1)).alias("n"),
+        F.sum("byte_len").alias("b"),
+    ).first()
+    if r["q"] is None:
+        return DocLengthStats(0.0, 0.0, 0, 0)
+    return DocLengthStats(float(r["q"][0]), float(r["q"][1]),
+                          round(r["n"] / sample_fraction),
+                          round(r["b"] / sample_fraction))
 
 
 def repartition_by_doc_length(docs: DataFrame, num_partitions: int,
                               hot_quantile: float = 0.99,
                               skew_ratio_threshold: float = 10.0,
                               sample_fraction: float = 0.05,
-                              stats: tuple[float, float] | None = None,
+                              stats: DocLengthStats | None = None,
                               min_partitions: int | None = None) -> DataFrame:
     """Cost-aware, *adaptive* partitioning for the extraction map stage.
 
@@ -69,16 +98,22 @@ def repartition_by_doc_length(docs: DataFrame, num_partitions: int,
         the top partition (range balances row counts, not cost) —
         measurably worse than round-robin (see tests/test_skew.py);
       * instead, split at the sampled hot quantile: the cold stream
-        round-robins over num_partitions (uniform cost), the hot stream
-        round-robins separately (few rows -> ~one giant per partition,
-        the irreducible minimum task size), then unionByName (narrow).
+        round-robins over ``num_partitions`` (P, uniform cost), the hot
+        stream round-robins separately over
+        ``k = min(P, ceil(est_rows * (1 - hot_quantile + 0.02)))``
+        partitions, then unionByName (narrow). The hot stream holds
+        about ``est_rows * (1 - hot_quantile)`` rows, and the 0.02
+        covers the sketch's rank error, so k leaves ~one giant per
+        task (the irreducible minimum task size) without scheduling
+        empty Python tasks — each pays a fixed worker setup cost
+        whatever its row count.
 
     Giant-task wall time collapses to a single doc's cost instead of a
     random number of colliding giants.
 
-    ``stats``: precomputed (median, hot-quantile) — pass it when the
-    input DataFrame has expensive upstream stages (the quantile pass is
-    an action and would recompute them; callers compute stats on the
+    ``stats``: precomputed ``DocLengthStats`` — pass it when the input
+    DataFrame has expensive upstream stages (the stats pass is an
+    action and would recompute them; callers compute stats on the
     cheap raw scan instead, see job.ExtractionJob.plan).
 
     ``min_partitions``: small-input parallelism floor. When the caller
@@ -89,18 +124,23 @@ def repartition_by_doc_length(docs: DataFrame, num_partitions: int,
     ``repartition(min_partitions)``. Previously the guard repartition
     ran *before* this function and the skew path then re-shuffled —
     two full shuffles of the batch where one serves both purposes."""
-    med, thr = stats if stats is not None else doc_length_stats(
+    st = stats if stats is not None else doc_length_stats(
         docs, sample_fraction, hot_quantile
     )
-    if thr <= 0 or med <= 0 or thr / med < skew_ratio_threshold:
+    thr = st.hot
+    if thr <= 0 or st.median <= 0 or thr / st.median < skew_ratio_threshold:
         if min_partitions is not None:
             # explicit numPartitions => shuffle origin REPARTITION_BY_NUM,
             # exempt from AQE byte-based coalescing (the guard's point)
             return docs.repartition(min_partitions)
         return docs  # no material skew: don't pay a shuffle for nothing
+    # round() first: 1 - 0.99 + 0.02 is 0.03 plus float noise, and
+    # ceil would turn 100 rows * 0.03 into 4 partitions
+    n_hot = min(num_partitions, math.ceil(
+        round(st.rows * (1 - hot_quantile + _RANK_ERROR), 9)))
     df = with_byte_len(docs)
     cold = df.filter(F.col("byte_len") < thr).repartition(num_partitions)
-    hot = df.filter(F.col("byte_len") >= thr).repartition(num_partitions)
+    hot = df.filter(F.col("byte_len") >= thr).repartition(n_hot)
     return cold.unionByName(hot).drop("byte_len")
 
 
