@@ -357,6 +357,36 @@ def test_sync_clusters_heals_lost_meta_without_rewrite(spark, tmp_path_factory):
     assert job.near_dup_clusters(spark) is not None  # consumers work again
 
 
+def _n_cached(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().cachedData().size()
+
+
+def test_sync_releases_band_row_cache(spark, tmp_path_factory, monkeypatch):
+    """Each sync persists the increment's band rows for its three
+    consumers and releases them afterwards — also when a commit raises.
+    A cache entry left behind per increment would pin memory for the
+    session's life and be matched during every later query's
+    planning (streaming micro-batches and daemon ingests sync forever)."""
+    out = str(tmp_path_factory.mktemp("job_nd_cache"))
+    job = ExtractionJob(out, near_dup_threshold=0.5)
+    before = _n_cached(spark)
+    job.run(spark, _docs(spark, [("a", NEAR_A), ("c", OTHER_C)]))
+    job.run(spark, _docs(spark, [("b", NEAR_B)]))
+    assert _n_cached(spark) == before
+
+    # a results run committed without its sync, then a sync whose
+    # pairs commit fails: the error propagates, the cache is released
+    ExtractionJob(out).run(spark, _docs(spark, [("d", NEAR_D)]))
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("pairs commit failed")
+
+    monkeypatch.setattr(job.neardup_pairs, "append", boom)
+    with pytest.raises(RuntimeError, match="pairs commit failed"):
+        job.sync_near_dup_index(spark)
+    assert _n_cached(spark) == before
+
+
 def test_lost_increment_fails_loud(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("job_nd_lost"))
     job = ExtractionJob(out, near_dup_threshold=0.5)

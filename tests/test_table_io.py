@@ -110,26 +110,64 @@ def test_compact_merges_snapshots_and_shrinks_files(spark, tmp_path_factory):
     assert tbl.compact(spark) is None
 
 
-def test_bucketed_append_writes_one_file_per_bucket(spark, tmp_path_factory):
+@pytest.mark.parametrize("n_buckets", [4, 32])
+def test_bucketed_append_writes_one_file_per_bucket(spark, tmp_path_factory,
+                                                    n_buckets):
     """Each append's hash-repartition means ONE file per bucket per run
     — without it every upstream partition writes its own file per
-    bucket (tasks x buckets small files per ingest)."""
+    bucket (tasks x buckets small files per ingest). The write runs k =
+    largest divisor of n_buckets <= defaultParallelism tasks (8 cores
+    here: k = 4 for 4 buckets, 8 for 32), each writing whole buckets:
+    every row sits in the file named for its Murmur3 bucket, and the
+    bucketed read still joins on the key with one Exchange."""
     import glob
     import os
 
-    from pyspark.sql import functions as F
+    from xs_vlm_ocr_spark.operators.bucketing import n_shuffle_exchanges
 
-    from xs_vlm_ocr_spark.table_io import CheckpointedTable
-
+    sc = spark.sparkContext
+    k = {4: 4, 32: 8}[n_buckets]
+    assert sc.defaultParallelism == 8
     path = str(tmp_path_factory.mktemp("tbl_files") / "t")
-    tbl = CheckpointedTable(path, bucket_key="content_hash", n_buckets=4)
-    df = spark.range(500).select(
+    tbl = CheckpointedTable(path, bucket_key="content_hash",
+                            n_buckets=n_buckets)
+    df = spark.range(0, 500, 1, 16).select(  # many upstream partitions
         F.md5(F.col("id").cast("string")).alias("content_hash"),
         F.col("id").alias("payload"),
-    ).repartition(16)  # many upstream partitions
-    tbl.append(df, "r0")
-    files = glob.glob(os.path.join(path, "data", "run_id=r0", "*.parquet"))
-    assert 0 < len(files) <= 4, files
+    )
+    group = f"bucketed_write_{n_buckets}"
+    sc.setJobGroup(group, "bucketed append")
+    try:
+        tbl.append(df, "r0")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+    run_dir = os.path.join(path, "data", "run_id=r0")
+    assert len(glob.glob(os.path.join(run_dir, "*.parquet"))) == n_buckets
+    placed = spark.read.parquet(run_dir).select(
+        F.regexp_extract(F.input_file_name(), r"_(\d{5})\.c\d{3}", 1)
+        .cast("int").alias("file_bucket"),
+        F.pmod(F.hash("content_hash"), F.lit(n_buckets)).alias("bucket"),
+    )
+    assert placed.filter(F.col("file_bucket") != F.col("bucket")).count() == 0
+    assert placed.select("file_bucket").distinct().count() == n_buckets
+
+    # the write is the group's last job; its result stage is its last
+    tracker = sc.statusTracker()
+    last_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
+    write_stage = tracker.getStageInfo(max(last_job.stageIds))
+    assert write_stage.numTasks == k, write_stage
+
+    broadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ
+    try:
+        probe = spark.range(0, 300, 1, 3).select(
+            F.md5((F.col("id") * 3).cast("string")).alias("content_hash"))
+        joined = tbl.read(spark).join(probe, "content_hash")
+        assert n_shuffle_exchanges(joined) == 1
+        assert joined.count() == 167  # multiples of 3 below 500
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", broadcast)
     assert tbl.read(spark).count() == 500
 
 

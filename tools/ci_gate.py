@@ -1,10 +1,10 @@
-"""One-command verification gate: pytest + driver contract + plan audit
-+ leak grep, single exit code. Rounds 4+ cannot silently regress any of
-the four (round-3 verdict, stretch item).
+"""One-command verification gate: pytest + benchmark smoke + driver
+contract + plan audit + leak grep, single exit code. Rounds 4+ cannot
+silently regress any of them (round-3 verdict, stretch item).
 
 Usage: python tools/ci_gate.py [--fast]
-  --fast skips pytest (the slowest leg) for an inner-loop gate; the full
-  gate is the pre-commit / pre-round check.
+  --fast skips pytest and the benchmark smoke (the slowest legs) for an
+  inner-loop gate; the full gate is the pre-commit / pre-round check.
 """
 
 from __future__ import annotations
@@ -174,6 +174,14 @@ def main() -> None:
         legs.append(run_leg(
             "pytest", [sys.executable, "-m", "pytest", "tests/", "-x", "-q"],
             r"\d+ passed"))
+        # both benchmark workloads on tiny seeded inputs with their output
+        # checks on: an engine change that breaks a benchmark's output
+        # check fails the gate, not only a manual verify
+        legs.append(run_leg(
+            "benchmark smoke",
+            [sys.executable, "perfbench/run.py", "--workload", "all",
+             "--seed", "1", "--seconds", "1", "--trace", "0", "--smoke"],
+            r'"correct": true, "attempted": \d+, "failed": 0'))
     ok = all(legs)
     print(f"CI GATE: {'PASS' if ok else 'FAIL'}", flush=True)
     sys.exit(0 if ok else 1)

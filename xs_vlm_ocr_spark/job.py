@@ -552,7 +552,9 @@ class ExtractionJob:
         suffix of runs the crash left behind), in commit order:
 
           1. signatures+band rows for the increment are computed ONCE
-             (``minhash_band_index``, persisted for its three consumers);
+             (``minhash_band_index``): the job persists the returned band
+             rows for their three consumers and unpersists them when the
+             increment is done, even if a commit raises;
           2. cross-increment pairs: probe against the stored index —
              single-key bucket equi-join, zero Exchange on the index
              side, committed text never re-read (minhash_probe_index);
@@ -605,42 +607,49 @@ class ExtractionJob:
             # bootstrap run.
             fresh = minhash_band_index(
                 self._committed_corpus(spark), "full_text", "doc_id",
-                num_perm, bands, gram_n, persist=True,
-            )
-            pairs = _canonical_pairs(
-                minhash_pairs_from_index(fresh, num_perm, bands, gram_n)
-                .filter(F.col("est_jaccard") >= self.near_dup_threshold)
-            )
-            boot = self._bootstrap_run_id()
-            if boot not in self.neardup_pairs.all_time_runs():
-                self.neardup_pairs.append(
-                    pairs.withColumn("run_id", F.lit(boot)), boot
+                num_perm, bands, gram_n, persist=False,
+            ).persist()
+            try:
+                pairs = _canonical_pairs(
+                    minhash_pairs_from_index(fresh, num_perm, bands, gram_n)
+                    .filter(F.col("est_jaccard") >= self.near_dup_threshold)
                 )
-            self.neardup_index.append(fresh, boot, also_mark=pending)
-            fresh.unpersist()
+                boot = self._bootstrap_run_id()
+                if boot not in self.neardup_pairs.all_time_runs():
+                    self.neardup_pairs.append(
+                        pairs.withColumn("run_id", F.lit(boot)), boot
+                    )
+                self.neardup_index.append(fresh, boot, also_mark=pending)
+            finally:
+                fresh.unpersist()
             return [boot]
         for r in pending:
             inc = self._run_corpus(spark, r)
             fresh = minhash_band_index(
                 inc, "full_text", "doc_id", num_perm, bands, gram_n,
-                persist=True,
-            )
-            pairs = minhash_pairs_from_index(fresh, num_perm, bands, gram_n)
-            committed_idx = self.neardup_index.read(spark)
-            if committed_idx is not None:
-                pairs = pairs.unionByName(
-                    minhash_probe_index(
-                        None, committed_idx, num_perm=num_perm, bands=bands,
-                        n=gram_n, probe_rows=fresh,
+                persist=False,
+            ).persist()
+            try:
+                pairs = minhash_pairs_from_index(fresh, num_perm, bands,
+                                                 gram_n)
+                committed_idx = self.neardup_index.read(spark)
+                if committed_idx is not None:
+                    pairs = pairs.unionByName(
+                        minhash_probe_index(
+                            None, committed_idx, num_perm=num_perm,
+                            bands=bands, n=gram_n, probe_rows=fresh,
+                        )
                     )
-                )
-            pairs = _canonical_pairs(
-                pairs.filter(F.col("est_jaccard") >= self.near_dup_threshold)
-            ).withColumn("run_id", F.lit(r))
-            if r not in self.neardup_pairs.all_time_runs():
-                self.neardup_pairs.append(pairs, r)
-            self.neardup_index.append(fresh, r)  # last commit: marks r done
-            fresh.unpersist()
+                pairs = _canonical_pairs(
+                    pairs.filter(F.col("est_jaccard")
+                                 >= self.near_dup_threshold)
+                ).withColumn("run_id", F.lit(r))
+                if r not in self.neardup_pairs.all_time_runs():
+                    self.neardup_pairs.append(pairs, r)
+                # last commit: marks r done
+                self.neardup_index.append(fresh, r)
+            finally:
+                fresh.unpersist()
         return pending
 
     def _heldout_corpus(self, spark: SparkSession) -> DataFrame:

@@ -289,12 +289,15 @@ def minhash_band_index(df: DataFrame, text_col: str = "text",
     stamps disagree with its own parameters instead of silently
     estimating garbage.
 
-    ``persist=True`` caches the signature aggregate (worth it when the
-    returned index feeds BOTH sides of a join, as in
-    ``minhash_lsh_pairs``); pass ``persist=False`` for
-    single-consumer builds (the probe side of ``minhash_probe_index``)
-    so long-running ingestion sessions don't accumulate corpus-scale
-    signature caches.
+    ``persist=True`` caches the INNER signature aggregate, not the
+    returned band rows (worth it when the returned index feeds BOTH
+    sides of a join, as in ``minhash_lsh_pairs``): the cache entry is
+    unreachable from the result, so ``result.unpersist()`` releases
+    nothing and it lives until the session ends. Long-running callers
+    pass ``persist=False`` — and, when they reuse the band rows,
+    persist and unpersist the returned frame themselves
+    (``job.ExtractionJob.sync_near_dup_index``) — so ingestion sessions
+    don't accumulate corpus-scale signature caches.
     """
     # sig[i] = min over the doc's distinct grams of h_i(g), computed as
     # num_perm parallel min() aggregates over ONE gram explode: each

@@ -88,9 +88,13 @@ class CheckpointedTable:
     anti-join against a committed table that grows toward 10^12 rows —
     reads the committed side PRE-PARTITIONED: zero Exchange on the big
     side, only the new batch shuffles (tests/test_bucketing.py pins the
-    plan). The manifest stays the ONLY commit point: uncommitted
-    ``run_id=`` partitions are pruned out of every read, so crash
-    atomicity is unchanged. On a real deployment this is the Iceberg
+    plan). Each run holds ONE file per non-empty bucket, written by k =
+    the largest divisor of n_buckets that is <= the cluster's task
+    slots: a divisor routes every bucket to a single write task, so
+    one task per core writes n_buckets / k whole buckets
+    (``_bucketed_write``). The manifest stays the ONLY commit point:
+    uncommitted ``run_id=`` partitions are pruned out of every read, so
+    crash atomicity is unchanged. On a real deployment this is the Iceberg
     ``bucket(N, content_hash)`` partition transform — same 1:1 swap as
     the rest of this class; reference analogue: ``idx_content_hash``,
     the reference's index on its cache-probe key
@@ -451,14 +455,21 @@ class CheckpointedTable:
         return f"added={added} missing={missing} changed={changed}"
 
     def _bucketed_write(self, df: DataFrame, run_id: str) -> None:
-        """One bucketed snapshot write. The hash-repartition to n_buckets
-        on the key is load-bearing: Spark's bucket id is
-        Murmur3Hash(key) pmod n_buckets — the SAME function
-        repartition(n, col) uses — so each write task holds exactly one
-        bucket's rows and emits ONE file per bucket (without it, every
-        upstream partition writes its own file per bucket:
-        tasks x buckets small files per run — measured 1000+ files for
-        one 5k-doc append). Iceberg analogue:
+        """One bucketed snapshot write. The hash-repartition on the key
+        is load-bearing: Spark's bucket id is Murmur3Hash(key) pmod
+        n_buckets, and repartition(k, col) routes a row by the SAME hash
+        pmod k. With k dividing n_buckets, pmod(h, k) is a function of
+        pmod(h, n_buckets), so every bucket's rows land in exactly ONE
+        write task and each run holds ONE file per non-empty bucket
+        (without the repartition, every upstream partition writes its
+        own file per bucket: tasks x buckets small files per run —
+        measured 1000+ files for one 5k-doc append). Each task writes
+        n_buckets / k bucket files. k is the largest divisor of
+        n_buckets that fits the task slots (defaultParallelism): one task
+        per core, not one per bucket — on 4 cores a 32-bucket append runs
+        4 tasks in one wave instead of 32 in 8, and with >= n_buckets
+        slots k = n_buckets. k stays a fixed-number repartition, so AQE
+        cannot coalesce it. Iceberg analogue:
         write.distribution-mode=hash on a bucket-transform table.
 
         Schema guarding lives in the CALLERS: ``append`` rejects an
@@ -470,8 +481,11 @@ class CheckpointedTable:
         spark = df.sparkSession
         self._ensure_registered(spark, df.schema)
         self.abandon(run_id)  # retry of a crashed run: clean partial dir
+        slots = spark.sparkContext.defaultParallelism
+        k = max(d for d in range(1, min(slots, self.n_buckets) + 1)
+                if self.n_buckets % d == 0)
         (
-            df.repartition(self.n_buckets, F.col(self.bucket_key))
+            df.repartition(k, F.col(self.bucket_key))
             .withColumn("run_id", F.lit(run_id))
             .write.partitionBy("run_id")
             .bucketBy(self.n_buckets, self.bucket_key)
