@@ -14,9 +14,10 @@ integration:
   * run(compute_signals=True) commits per-doc Gopher repetition stats +
     token counts + quality + lang-id to a `signals` table, ONE
     zero-shuffle projection per increment;
-  * both follow the near-dup crash-consistency discipline verbatim:
-    suffix heal, zero-row-run marking, bootstrap over a rewritten
-    corpus, loud failure on the one unhealable violation;
+  * both follow the derived-table crash-consistency rule shared with
+    the near-dup index (ExtractionJob._increments): suffix heal,
+    zero-row-run marking, bootstrap over a rewritten corpus, loud
+    failure on the one unhealable violation;
   * plan pins: the held-out gram set broadcasts and the increment's
     grams never shuffle (one groupBy(doc) exchange total); the signals
     projection has zero hash exchanges.
@@ -112,12 +113,14 @@ def test_crash_heal_equals_no_crash(spark, tmp_path_factory):
     b3 = [("c2", CLEAN_2)]
 
     clean_out = str(tmp_path_factory.mktemp("decon_clean"))
-    clean = ExtractionJob(clean_out, heldout_dir=hd, contamination_n=5)
+    clean = ExtractionJob(clean_out, heldout_dir=hd, contamination_n=5,
+                          compute_signals=True)
     for b in (b1, b2, b3):
         clean.run(spark, _docs(spark, b))
 
     crash_out = str(tmp_path_factory.mktemp("decon_crash"))
-    crashed = ExtractionJob(crash_out, heldout_dir=hd, contamination_n=5)
+    crashed = ExtractionJob(crash_out, heldout_dir=hd, contamination_n=5,
+                            compute_signals=True)
     crashed.run(spark, _docs(spark, b1))
     # "crash" between the results commit and the contamination commit:
     # a plain job (no heldout) runs the same commit path without sync
@@ -129,6 +132,13 @@ def test_crash_heal_equals_no_crash(spark, tmp_path_factory):
 
     assert _span_rows(crashed, spark) == _span_rows(clean, spark)
     assert len(crashed.contamination.all_time_runs()) == 3
+
+    def signal_rows(job):
+        sig = job.read_signals(spark).drop("run_id")
+        return sorted(tuple(r) for r in sig.collect())
+
+    assert signal_rows(crashed) == signal_rows(clean)
+    assert len(crashed.signals.all_time_runs()) == 3
 
 
 def test_zero_row_run_marked_ingested(spark, tmp_path_factory):
@@ -180,12 +190,32 @@ def test_bootstrap_over_compacted_corpus(spark, tmp_path_factory):
 def test_lost_increment_fails_loud(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("decon_lost"))
     hd = _heldout(spark, tmp_path_factory)
-    job = ExtractionJob(out, heldout_dir=hd, contamination_n=5)
+    job = ExtractionJob(out, heldout_dir=hd, contamination_n=5,
+                        compute_signals=True)
     job.run(spark, _docs(spark, [("c1", CLEAN_1)]))
     ExtractionJob(out).run(spark, _docs(spark, [("t1", TAINTED_1)]))
     job.results.compact(spark)
     with pytest.raises(RuntimeError, match="compacted/expired away"):
         job.sync_contamination(spark)
+    with pytest.raises(RuntimeError, match="compacted/expired away"):
+        job.sync_signals(spark)
+
+
+def test_in_step_sync_skips_heldout_read(spark, tmp_path_factory):
+    """An in-step contamination sync has nothing to scan, so it must not
+    touch the held-out corpus: a held-out dir moved after ingestion
+    does not break write_deduped / read_clean(sync=True)."""
+    import os
+
+    out = str(tmp_path_factory.mktemp("decon_moved"))
+    hd = _heldout(spark, tmp_path_factory)
+    job = ExtractionJob(out, heldout_dir=hd, contamination_n=5)
+    job.run(spark, _docs(spark, [("t1", TAINTED_1), ("c1", CLEAN_1)]))
+    os.rename(hd, hd + "_moved")
+    assert job.sync_contamination(spark) == []
+    assert job.read_clean(spark, sync=True).count() == 2
+    dest = str(tmp_path_factory.mktemp("decon_moved_clean") / "clean")
+    assert job.write_deduped(spark, dest)["kept"] == 2
 
 
 def test_signals_values_match_operators(spark, tmp_path_factory):

@@ -29,7 +29,7 @@ dedup decision loop at sf0.1 scale:
               deterministic snapshot id, same counts, same row set
 
 Prints one JSON line per pass plus a final summary; paste the table
-into BENCH/BASELINE.md. Inputs are derived deterministically from the
+into CHANGES.md. Inputs are derived deterministically from the
 driver's sf0.1 documents table — no external data.
 
 Usage:  python tools/rehearse_clean_corpus.py [sf_dir] [workdir]
@@ -60,8 +60,7 @@ QUALITY_FLAGS = ["--min-quality", "0.9", "--max-top-gram-frac", "0.08"]
 def _spark():
     from xs_vlm_ocr_spark.session import get_spark
 
-    spark = get_spark("clean-corpus-rehearsal", cores=32,
-                      shuffle_partitions=32)
+    spark = get_spark("clean-corpus-rehearsal")
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 

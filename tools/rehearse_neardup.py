@@ -20,7 +20,7 @@ scale, at sf0.1 scale:
           increments looking ingested
 
 Prints one JSON line per pass plus a final summary; paste the table
-into BENCH/BASELINE.md. Inputs are derived deterministically from the
+into CHANGES.md. Inputs are derived deterministically from the
 driver's sf0.1 documents table (batches split by doc_id; near-dups are
 single-word substitutions, word-3-gram Jaccard ~0.99).
 
@@ -45,7 +45,7 @@ THRESHOLD = "0.5"
 def _spark():
     from xs_vlm_ocr_spark.session import get_spark
 
-    spark = get_spark("neardup-rehearsal", cores=32, shuffle_partitions=32)
+    spark = get_spark("neardup-rehearsal")
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 

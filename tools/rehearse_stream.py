@@ -27,7 +27,7 @@ files that arrived since the last run.
                   up-to-symmetry)
 
 Prints one JSON line per pass plus CONVERGED true/false; paste the
-summary into BENCH/round_notes.md.
+summary into CHANGES.md.
 
 Usage:  python tools/rehearse_stream.py [sf_dir] [workdir]
 """
@@ -50,7 +50,7 @@ FLAGS = ("--near-dup-threshold", THRESHOLD, "--signals")
 def _spark():
     from xs_vlm_ocr_spark.session import get_spark
 
-    spark = get_spark("stream-rehearsal", cores=32, shuffle_partitions=32)
+    spark = get_spark("stream-rehearsal")
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 

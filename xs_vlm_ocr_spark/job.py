@@ -10,7 +10,8 @@ restated as one declarative Spark plan.
 
 Resumable: a rerun with the same run-output tables processes only docs
 whose content_hash is absent from the committed snapshot, and the final
-table equals the single-run result (tested in tests/test_resume.py).
+table equals the single-run result (tested in
+tests/test_end_to_end.py::test_resume_processes_only_missing).
 """
 
 from __future__ import annotations
@@ -436,66 +437,93 @@ class ExtractionJob:
         # crash before this line leaves it behind, like any torn write;
         # the rerun stages under its own run_id)
         shutil.rmtree(staging, ignore_errors=True)
-        if self.near_dup_threshold is not None:
-            self.sync_near_dup_index(spark)
-        if self.heldout_dir is not None:
-            self.sync_contamination(spark)
-        if self.compute_signals:
-            self.sync_signals(spark)
+        self._sync_derived(spark)
         if compact_after is not None:
-            self.results.maybe_compact(spark, compact_after)
-            self.lineage.maybe_compact(spark, compact_after)
-            if self.near_dup_threshold is not None:
-                # safe even for the index: all_time_runs() keeps the
-                # ingested-increment bookkeeping across compaction
-                self.neardup_index.maybe_compact(spark, compact_after)
-                self.neardup_pairs.maybe_compact(spark, compact_after)
-            if self.heldout_dir is not None:
-                self.contamination.maybe_compact(spark, compact_after)
-            if self.compute_signals:
-                self.signals.maybe_compact(spark, compact_after)
+            # safe for the derived tables too: all_time_runs() keeps the
+            # ingested-increment bookkeeping across compaction
+            derived = [t for _, tables in self._derived_stages()
+                       for t in tables]
+            for table in (self.results, self.lineage, *derived):
+                table.maybe_compact(spark, compact_after)
         return run_id
 
     # ------------------------------------------------ derived-table ingest
 
     _PROBE_SCHEMA = "doc_id string, full_text string"
 
-    def _pending_results_increments(
-        self, dst: CheckpointedTable, what: str, rebuild_hint: str,
-    ) -> tuple[bool, list[str]]:
-        """Which committed results runs has derived table ``dst`` not
-        ingested yet? Returns ``(bootstrap, runs)``:
+    def _derived_stages(self) -> list[tuple]:
+        """The enabled derived-table stages in sync order, as (sync
+        method, tables it commits). Built per call, so a sync method
+        patched on the class is the one that runs."""
+        stages = []
+        if self.near_dup_threshold is not None:
+            stages.append((self.sync_near_dup_index,
+                           (self.neardup_index, self.neardup_pairs)))
+        if self.heldout_dir is not None:
+            stages.append((self.sync_contamination, (self.contamination,)))
+        if self.compute_signals:
+            stages.append((self.sync_signals, (self.signals,)))
+        return stages
 
-        * ``(False, pending)`` — the runs to ingest, in commit order.
-          Un-ingested runs are always a SUFFIX of the results manifest
-          (each consumer's append is its last commit per run), so
-          replaying them in order reproduces the no-crash outcome.
-        * ``(True, covered)`` — ``dst`` is EMPTY but the results table
-          has rewrite history (the feature was enabled on a deployment
-          whose original run dirs were already compacted/retained
-          away): per-increment replay is impossible, but the whole
-          committed corpus is one valid increment — the caller ingests
-          it in one pass and commits with ``also_mark=covered`` so the
-          data and its coverage land in the SAME atomic manifest write.
+    def _sync_derived(self, spark: SparkSession) -> None:
+        """Bring every enabled derived table in step with the committed
+        results: a no-op per table already in step, a heal of the
+        crashed suffix otherwise."""
+        for sync, _ in self._derived_stages():
+            sync(spark)
 
-        Rewrite snapshots (compaction / retention / migration — the
-        canonical prefix list lives in table_io.REWRITE_PREFIXES next to
-        where the ids are minted) are NOT increments: every row they
-        hold came from runs already ingested — run() always syncs before
-        maybe_compact — so ingesting one would duplicate the whole
-        corpus downstream. Raises LOUDLY on the one discipline violation
-        that makes per-increment healing impossible: an original run
-        that was never ingested but whose dir a manual rewrite already
-        absorbed."""
+    def _increments(
+        self, spark: SparkSession, dst: CheckpointedTable, what: str,
+        rebuild_hint: str,
+    ) -> list[tuple[DataFrame, str, list[str]]]:
+        """The increments derived table ``dst`` still owes, in commit
+        order, as ``(corpus, run_id, also_mark)``: ``corpus`` is probe
+        rows (doc_id=content_hash, full_text), and the caller commits
+        the rows it derives from them with ``dst.append(rows, run_id,
+        also_mark=also_mark)`` as its LAST commit for the increment.
+        Every ``sync_*`` stage is one loop over this list.
+
+        CRASH CONSISTENCY, one rule for every derived table:
+
+        * Suffix replay. The ingested set is ``dst.all_time_runs()``
+          (all-time, not committed, so compacting either table never
+          makes an ingested increment look pending). Since ``dst``'s
+          append is each increment's last commit, the un-ingested
+          results runs are always a SUFFIX of the results manifest.
+          Each is one ``_run_corpus`` increment, and replaying them in
+          order reproduces the no-crash outcome: derived rows depend
+          only on the text and on the derived state the run would have
+          seen. A zero-row run is an empty increment, so it is still
+          marked ingested.
+        * Bootstrap. ``dst`` is EMPTY but the results table has rewrite
+          history (the stage was enabled on a deployment whose original
+          run dirs were already compacted/retained away). Per-run
+          replay is impossible, but the whole committed corpus
+          (``_committed_corpus``) is one valid increment:
+          ``bootstrap-<md5 of the results runs>`` with ``also_mark`` =
+          every results run, so the data and its coverage land in the
+          SAME atomic manifest write.
+        * Rewrite snapshots (``table_io.REWRITE_PREFIXES``) are never
+          increments: every row they hold came from runs already
+          ingested (run() syncs before maybe_compact), so ingesting one
+          would duplicate the corpus downstream.
+        * Loud failure. An original run that ``dst`` never ingested
+          but whose dir a manual rewrite already absorbed cannot be
+          healed per increment: raises, naming ``rebuild_hint`` (the
+          rebuilt, empty table then takes the bootstrap)."""
+        import hashlib
+
         ingested = dst.all_time_runs()
+        history = self.results.all_time_runs()
+        if not ingested and any(r.startswith(REWRITE_PREFIXES)
+                                for r in history):
+            covered = sorted(history)
+            boot = "bootstrap-" + hashlib.md5(
+                ",".join(covered).encode()).hexdigest()[:12]
+            return [(self._committed_corpus(spark), boot, covered)]
         committed = self.results.committed_runs()
-        rewrite = REWRITE_PREFIXES
-        if not ingested and any(r.startswith(rewrite)
-                                for r in self.results.all_time_runs()):
-            return True, sorted(self.results.all_time_runs())
         lost = {
-            r for r in self.results.all_time_runs()
-            if not r.startswith(rewrite)
+            r for r in history if not r.startswith(REWRITE_PREFIXES)
         } - ingested - set(committed)
         if lost:
             raise RuntimeError(
@@ -506,8 +534,9 @@ class ExtractionJob:
                 "empty table then takes the BOOTSTRAP path (one "
                 "full-corpus increment, single-run attribution)."
             )
-        return False, [r for r in committed
-                       if r not in ingested and not r.startswith(rewrite)]
+        return [(self._run_corpus(spark, r), r, [])
+                for r in committed
+                if r not in ingested and not r.startswith(REWRITE_PREFIXES)]
 
     def _run_corpus(self, spark: SparkSession, run_id: str) -> DataFrame:
         """One committed results run as (doc_id=content_hash, full_text)
@@ -538,13 +567,6 @@ class ExtractionJob:
             .dropDuplicates(["doc_id"])
         )
 
-    def _bootstrap_run_id(self) -> str:
-        import hashlib
-
-        return "bootstrap-" + hashlib.md5(
-            ",".join(sorted(self.results.all_time_runs())).encode()
-        ).hexdigest()[:12]
-
     def sync_near_dup_index(self, spark: SparkSession) -> list[str]:
         """Bring the persisted near-dup index in step with the committed
         results: for every results run not yet ingested (normally just
@@ -563,18 +585,15 @@ class ExtractionJob:
           4. pairs >= threshold committed to ``neardup_pairs``, then the
              band rows appended to ``neardup_index``.
 
-        CRASH CONSISTENCY: the ingested set is "results runs present in
-        neardup_index.all_time_runs()" — un-ingested runs are always a
-        suffix of the results manifest (step 4's index append is the
-        last commit per run), so replaying them in order reproduces the
-        no-crash outcome BIT-FOR-BIT: the signatures depend only on the
-        text (md5 family; append==rebuild equality is pinned in
-        tests/test_text_dedup.py), and each healed run probes exactly
-        the index state it would have seen. A pairs run that committed
-        before the crash is skipped by the same all_time_runs check
-        (its rewrite would be identical rows). Bookkeeping is on
-        all_time_runs, not committed_runs, so compacting either table
-        never makes an ingested increment look un-ingested.
+        Crash consistency, bootstrap included, is :meth:`_increments`'s
+        rule, with the index append as the last commit. Healing is
+        BIT-FOR-BIT: the signatures depend only on the text (md5 family;
+        append==rebuild equality is pinned in tests/test_text_dedup.py),
+        each healed run probes exactly the index state it would have
+        seen, and a pairs run that committed before the crash is
+        skipped. A bootstrap increment probes nothing (the index is
+        empty), so its pair SET equals what per-run ingestion would have
+        produced, attributed to one bootstrap run.
 
         Replay runs re-emit committed hashes as new rows; their band
         rows re-enter the index as duplicate doc_ids, which is benign —
@@ -588,45 +607,13 @@ class ExtractionJob:
         )
 
         num_perm, bands, gram_n = self.minhash_params
-        bootstrap, pending = self._pending_results_increments(
-            self.neardup_index, "near-dup index",
+        incs = self._increments(
+            spark, self.neardup_index, "near-dup index",
             rebuild_hint="delete the neardup_index and neardup_pairs dirs",
         )
-        if bootstrap:
-            # BOOTSTRAP: a fresh index (nothing ever ingested) over a
-            # corpus that already has rewrite history — near-dup enabled
-            # on a long-lived deployment whose results were compacted/
-            # retained before the feature was turned on. Per-increment
-            # ingestion is impossible (the original run dirs are
-            # absorbed), but with an EMPTY index the whole current
-            # committed corpus IS one valid increment: index it in one
-            # pass and, in the SAME atomic manifest commit, mark every
-            # historical results run as covered (no crash window between
-            # data and coverage). The pair SET equals what per-run
-            # ingestion would have produced; attribution is a single
-            # bootstrap run.
+        for corpus, r, also_mark in incs:
             fresh = minhash_band_index(
-                self._committed_corpus(spark), "full_text", "doc_id",
-                num_perm, bands, gram_n, persist=False,
-            ).persist()
-            try:
-                pairs = _canonical_pairs(
-                    minhash_pairs_from_index(fresh, num_perm, bands, gram_n)
-                    .filter(F.col("est_jaccard") >= self.near_dup_threshold)
-                )
-                boot = self._bootstrap_run_id()
-                if boot not in self.neardup_pairs.all_time_runs():
-                    self.neardup_pairs.append(
-                        pairs.withColumn("run_id", F.lit(boot)), boot
-                    )
-                self.neardup_index.append(fresh, boot, also_mark=pending)
-            finally:
-                fresh.unpersist()
-            return [boot]
-        for r in pending:
-            inc = self._run_corpus(spark, r)
-            fresh = minhash_band_index(
-                inc, "full_text", "doc_id", num_perm, bands, gram_n,
+                corpus, "full_text", "doc_id", num_perm, bands, gram_n,
                 persist=False,
             ).persist()
             try:
@@ -646,11 +633,11 @@ class ExtractionJob:
                 ).withColumn("run_id", F.lit(r))
                 if r not in self.neardup_pairs.all_time_runs():
                     self.neardup_pairs.append(pairs, r)
-                # last commit: marks r done
-                self.neardup_index.append(fresh, r)
+                # last commit: marks r (and what it covers) done
+                self.neardup_index.append(fresh, r, also_mark=also_mark)
             finally:
                 fresh.unpersist()
-        return pending
+        return [r for _, r, _ in incs]
 
     def _heldout_corpus(self, spark: SparkSession) -> DataFrame:
         """The held-out (benchmark/test-set) corpus normalized to probe
@@ -687,41 +674,29 @@ class ExtractionJob:
         projection of this table — one committed artifact serves both
         the flag and the span-surgery consumer (write_deduped).
 
-        Crash consistency is the near-dup discipline verbatim
-        (:meth:`sync_near_dup_index`): the contamination append is the
-        run's last commit, un-ingested runs are a manifest suffix, and
-        replay is idempotent because spans depend only on the text.
+        Crash consistency is :meth:`_increments`'s rule, with the
+        contamination append as the last commit; the held-out corpus is
+        read only when an increment is pending.
         100 TB shape: the held-out gram set is tiny (10^4-10^6 grams)
         and BROADCASTS; the increment's grams never shuffle — only the
         hit positions (a sliver of the corpus) take the one groupBy(doc)
         exchange (plan-pinned in tests/test_job_decontamination.py)."""
         from xs_vlm_ocr_spark.operators.text_dedup import contamination_spans
 
-        bootstrap, pending = self._pending_results_increments(
-            self.contamination, "contamination table",
+        incs = self._increments(
+            spark, self.contamination, "contamination table",
             rebuild_hint="delete the contamination dir",
         )
+        if not incs:
+            return []
         heldout = self._heldout_corpus(spark)
-        if bootstrap:
-            # same BOOTSTRAP shape as the near-dup index: decon enabled
-            # on a corpus whose original run dirs were already rewritten
-            # away — scan the whole committed corpus as ONE increment
-            # and mark every historical run covered in the same atomic
-            # manifest write.
-            boot = self._bootstrap_run_id()
-            spans = contamination_spans(
-                self._committed_corpus(spark), heldout,
-                n=self.contamination_n, text_col="full_text",
-            ).withColumn("run_id", F.lit(boot))
-            self.contamination.append(spans, boot, also_mark=pending)
-            return [boot]
         # a crashed multi-run suffix scans several increments against
         # the SAME held-out set: derive (and persist) the distinct gram
         # frame once instead of re-reading + re-distincting the held-out
         # corpus per pending run (r7 verdict nit; single-run syncs — the
         # normal case — keep the zero-overhead inline derivation)
         te = None
-        if len(pending) > 1:
+        if len(incs) > 1:
             from xs_vlm_ocr_spark.operators.text_dedup import (
                 with_word_gram_strings,
             )
@@ -732,17 +707,16 @@ class ExtractionJob:
                 ).select("g").distinct().persist()
             )
         try:
-            for r in pending:
+            for corpus, r, also_mark in incs:
                 spans = contamination_spans(
-                    self._run_corpus(spark, r), heldout,
-                    n=self.contamination_n, text_col="full_text",
-                    test_grams=te,
+                    corpus, heldout, n=self.contamination_n,
+                    text_col="full_text", test_grams=te,
                 ).withColumn("run_id", F.lit(r))
-                self.contamination.append(spans, r)
+                self.contamination.append(spans, r, also_mark=also_mark)
         finally:
             if te is not None:
                 te.unpersist()
-        return pending
+        return [r for _, r, _ in incs]
 
     def read_contamination(self, spark: SparkSession) -> DataFrame | None:
         """Committed contamination spans, one row per (doc, span) —
@@ -763,9 +737,8 @@ class ExtractionJob:
         scan, no per-doc join. Committed to a ``signals`` table keyed by
         content_hash; write_deduped's quality threshold consumes it.
 
-        Crash consistency: the near-dup discipline verbatim
-        (:meth:`sync_near_dup_index`) — suffix replay, idempotent
-        because every signal is a pure function of the text."""
+        Crash consistency is :meth:`_increments`'s rule, with the
+        signals append as the last commit."""
         from xs_vlm_ocr_spark.operators.text_analysis import (
             bpe_ish_token_count,
             lang_id,
@@ -782,27 +755,17 @@ class ExtractionJob:
             "lang": lang_id(t),
         }
 
-        def signals_of(corpus: DataFrame) -> DataFrame:
-            return repetition_signals(
-                corpus, text_col="full_text", id_col="doc_id",
-                n=self.repetition_n, extra=extra,
-            )
-
-        bootstrap, pending = self._pending_results_increments(
-            self.signals, "signals table",
+        incs = self._increments(
+            spark, self.signals, "signals table",
             rebuild_hint="delete the signals dir",
         )
-        if bootstrap:
-            boot = self._bootstrap_run_id()
-            sig = signals_of(self._committed_corpus(spark)) \
-                .withColumn("run_id", F.lit(boot))
-            self.signals.append(sig, boot, also_mark=pending)
-            return [boot]
-        for r in pending:
-            sig = signals_of(self._run_corpus(spark, r)) \
-                .withColumn("run_id", F.lit(r))
-            self.signals.append(sig, r)
-        return pending
+        for corpus, r, also_mark in incs:
+            sig = repetition_signals(
+                corpus, text_col="full_text", id_col="doc_id",
+                n=self.repetition_n, extra=extra,
+            ).withColumn("run_id", F.lit(r))
+            self.signals.append(sig, r, also_mark=also_mark)
+        return [r for _, r, _ in incs]
 
     def read_signals(self, spark: SparkSession) -> DataFrame | None:
         """Committed per-doc signals, one row per content_hash (replay
@@ -814,8 +777,6 @@ class ExtractionJob:
 
     def read_near_dup_pairs(self, spark: SparkSession) -> DataFrame | None:
         return self.neardup_pairs.read(spark)
-
-    _REWRITE_PREFIXES = REWRITE_PREFIXES  # canonical list: table_io
 
     def sync_clusters(self, spark: SparkSession) -> str | None:
         """Bring the persisted cluster assignment in step with the
@@ -855,7 +816,7 @@ class ExtractionJob:
 
         cur = sorted(
             r for r in self.neardup_pairs.all_time_runs()
-            if not r.startswith(self._REWRITE_PREFIXES)
+            if not r.startswith(REWRITE_PREFIXES)
         )
         prev_tbl = self.neardup_clusters_tbl.read(spark)
         meta = self.neardup_clusters_tbl.get_meta()
@@ -1024,12 +985,7 @@ class ExtractionJob:
         quality_gated = self._quality_gated(
             min_quality, max_dup_gram_frac, max_top_gram_frac)
         if sync:
-            if self.near_dup_threshold is not None:
-                self.sync_near_dup_index(spark)
-            if self.heldout_dir is not None:
-                self.sync_contamination(spark)
-            if self.compute_signals:
-                self.sync_signals(spark)
+            self._sync_derived(spark)
         decided = self._decided_corpus(
             spark, drop_contaminated=drop_contaminated,
             min_quality=min_quality,
@@ -1092,12 +1048,7 @@ class ExtractionJob:
             min_quality, max_dup_gram_frac, max_top_gram_frac)
         # bring every decision input in step first (no-ops when run()
         # already synced; heals a crashed suffix when called standalone)
-        if self.near_dup_threshold is not None:
-            self.sync_near_dup_index(spark)
-        if self.heldout_dir is not None:
-            self.sync_contamination(spark)
-        if self.compute_signals:
-            self.sync_signals(spark)
+        self._sync_derived(spark)
 
         import hashlib
 
