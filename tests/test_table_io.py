@@ -297,6 +297,44 @@ def test_legacy_manifest_layout_inferred_from_files(spark, tmp_path_factory):
         CheckpointedTable(path, bucket_key="content_hash").read(spark)
 
 
+def test_legacy_layout_inference_lists_bounded_dirs(spark, tmp_path_factory,
+                                                    monkeypatch):
+    """Every read of a legacy manifest infers the layout from the file
+    names. The inference must stop at the first data file: directory
+    listings per read stay flat as the committed run count grows."""
+    import json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def listings_per_read(n_runs: int) -> int:
+        path = str(tmp_path_factory.mktemp(f"tbl_legacy_{n_runs}") / "t")
+        runs = [f"r{i:03d}" for i in range(n_runs)]
+        for r in runs:
+            os.makedirs(os.path.join(path, "data", f"run_id={r}"))
+            pq.write_table(pa.table({"x": [1]}),
+                           os.path.join(path, "data", f"run_id={r}", "part-0.parquet"))
+        with open(os.path.join(path, "manifest.json"), "w") as f:
+            json.dump({"runs": runs}, f)  # no layout record
+        seen = []
+        for name in ("scandir", "listdir"):
+            real = getattr(os, name)
+
+            def counting(p=".", _real=real):
+                if str(p).startswith(path):
+                    seen.append(p)
+                return _real(p)
+
+            monkeypatch.setattr(os, name, counting)
+        df = CheckpointedTable(path).read(spark)
+        monkeypatch.undo()
+        assert df.count() == n_runs
+        return len(seen)
+
+    assert listings_per_read(40) == listings_per_read(2)
+
+
 # ------------------------------------------- bucketed schema evolution
 
 

@@ -185,7 +185,7 @@ def test_snapshot_id_stable_across_empty_rerun(spark, tmp_path_factory):
     """A rerun over an already-ingested corpus commits a ZERO-ROW results
     run; the decision over identical content must mint the IDENTICAL
     deterministic snapshot id (keyed on content_runs, not all_time_runs
-    — caught by tools/rehearse_clean_corpus.py on the CLI surface)."""
+    — caught by tools/rehearse.py on the CLI surface)."""
     out = str(tmp_path_factory.mktemp("wd_idem"))
     dest = str(tmp_path_factory.mktemp("wd_idem_dest"))
     job = ExtractionJob(out)
@@ -228,6 +228,21 @@ def test_snapshot_id_tracks_decision_table_provenance(spark, tmp_path_factory):
     shutil.rmtree(job3.contamination.path)
     c3 = job3.write_deduped(spark, dest)
     assert c3["snapshot"] != c2["snapshot"]
+
+    # a PARTITIONED held-out set: a row appended inside an existing
+    # partition dir changes no top-level entry, and still changes the id
+    pd = str(tmp_path_factory.mktemp("heldout_part") / "bench")
+    schema = "doc_id long, text string, lang string"
+    spark.createDataFrame([(0, BENCH, "en")], schema) \
+        .write.partitionBy("lang").parquet(pd)
+    job4 = ExtractionJob(out, heldout_dir=pd, contamination_n=7)
+    shutil.rmtree(job4.contamination.path)
+    c4 = job4.write_deduped(spark, dest)
+    spark.createDataFrame([(1, CLEAN_2, "en")], schema) \
+        .write.mode("append").partitionBy("lang").parquet(pd)
+    shutil.rmtree(job4.contamination.path)
+    c5 = job4.write_deduped(spark, dest)
+    assert c5["snapshot"] != c4["snapshot"]
 
 
 def test_meta_crash_heals_without_rewrite(spark, tmp_path_factory):

@@ -1,10 +1,12 @@
-"""One-command verification gate: pytest + benchmark smoke + driver
-contract + plan audit + leak grep, single exit code. Rounds 4+ cannot
-silently regress any of them (round-3 verdict, stretch item).
+"""One-command verification gate: pytest + benchmark smoke + CLI
+rehearsal + driver contract + plan audit + leak grep, single exit code.
+Rounds 4+ cannot silently regress any of them (round-3 verdict, stretch
+item).
 
 Usage: python tools/ci_gate.py [--fast]
-  --fast skips pytest and the benchmark smoke (the slowest legs) for an
-  inner-loop gate; the full gate is the pre-commit / pre-round check.
+  --fast skips pytest, the benchmark smoke and the rehearsal (the
+  slowest legs) for an inner-loop gate; the full gate is the pre-commit
+  / pre-round check.
 """
 
 from __future__ import annotations
@@ -13,6 +15,7 @@ import os
 import re
 import subprocess
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -182,6 +185,13 @@ def main() -> None:
             [sys.executable, "perfbench/run.py", "--workload", "all",
              "--seed", "1", "--seconds", "1", "--trace", "0", "--smoke"],
             r'"correct": true, "attempted": \d+, "failed": 0'))
+        # crash/heal, compaction, write_deduped and stream == batch on
+        # the job_main.py CLI, one cold process per pass
+        with tempfile.TemporaryDirectory(prefix="rehearsal_") as wd:
+            legs.append(run_leg(
+                "rehearsal", [sys.executable, "tools/rehearse.py",
+                              "/root/testdata/sf0.01", wd],
+                r"REHEARSAL: PASS"))
     ok = all(legs)
     print(f"CI GATE: {'PASS' if ok else 'FAIL'}", flush=True)
     sys.exit(0 if ok else 1)

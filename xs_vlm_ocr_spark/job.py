@@ -1056,8 +1056,8 @@ class ExtractionJob:
         # rewrite snapshots): a routine rerun over an already-ingested
         # corpus commits a zero-row results run, and the decision over
         # identical content must mint the identical snapshot (caught by
-        # tools/rehearse_clean_corpus.py, which asserts the rerun is
-        # bit-idempotent end to end). The id also folds in the DECISION
+        # tools/rehearse.py, which asserts the rerun is bit-idempotent
+        # end to end). The id also folds in the DECISION
         # TABLES' provenance — the params that shape them plus each
         # derived table's content runs and the held-out corpus identity
         # — so the documented rebuild flow (delete contamination/signals
@@ -1065,17 +1065,22 @@ class ExtractionJob:
         # a NEW id instead of silently serving the stale committed
         # snapshot as current (r7 advice, medium).
         def _heldout_identity():
+            # every data file at any depth: a partition dir's own size
+            # does not change when a file is added inside it
             if self.heldout_dir is None:
                 return None
+            files = []
             try:
-                names = sorted(
-                    (f, os.path.getsize(os.path.join(self.heldout_dir, f)))
-                    for f in os.listdir(self.heldout_dir)
-                    if not f.startswith(("_", "."))
-                )
+                for root, dirs, fs in os.walk(self.heldout_dir):
+                    dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+                    for f in fs:
+                        if not f.startswith(("_", ".")):
+                            p = os.path.join(root, f)
+                            files.append((os.path.relpath(p, self.heldout_dir),
+                                          os.path.getsize(p)))
             except OSError:
-                names = []
-            return (self.heldout_dir, names)
+                files = []
+            return (self.heldout_dir, sorted(files))
 
         params = (sorted(self.results.content_runs()), drop_contaminated,
                   min_quality, max_dup_gram_frac, max_top_gram_frac,

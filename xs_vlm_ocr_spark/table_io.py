@@ -154,8 +154,9 @@ class CheckpointedTable:
         return {"bucket_key": self.bucket_key, "n_buckets": self.n_buckets}
 
     def _files_look_bucketed(self) -> bool:
-        for p in glob.glob(os.path.join(self.data_dir, "**", "*.parquet"),
-                           recursive=True):
+        # iglob: stops listing at the first file, however many runs
+        for p in glob.iglob(os.path.join(self.data_dir, "**", "*.parquet"),
+                            recursive=True):
             return bool(_BUCKET_FILE_RE.search(os.path.basename(p)))
         return False
 
@@ -227,11 +228,12 @@ class CheckpointedTable:
             meta = old.get("meta", {})
         tmp = self.manifest_path + f".tmp.{uuid.uuid4().hex}"
         os.makedirs(self.path, exist_ok=True)
-        stats = {r: s for r, s in stats.items() if r in set(runs)}
+        live = set(runs)
+        stats = {r: s for r, s in stats.items() if r in live}
         with open(tmp, "w") as f:
             json.dump({"runs": runs, "layout": self._layout(),
                        "stats": stats, "meta": meta,
-                       "ancestry": sorted(prev - set(runs)),
+                       "ancestry": sorted(prev - live),
                        "empty_runs": sorted(empty)}, f)
         os.replace(tmp, self.manifest_path)  # atomic commit point
 
