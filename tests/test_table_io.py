@@ -388,6 +388,39 @@ def test_bucketed_schema_guard_survives_fresh_session_catalog(spark, tmp_path_fa
         fresh.append(_ts_rows(spark, 2).withColumn("lang", F.lit("x")), "r1")
 
 
+def test_bucketed_read_sees_runs_committed_by_another_process(spark, tmp_path):
+    """A session that already read a bucketed table must still see runs
+    another process commits later: the read registers every committed
+    run its catalog entry lacks, instead of filtering the new manifest's
+    run ids through a catalog that has no partitions for them (10 rows
+    where the manifest commits 20). Once every run is registered, a
+    read adds no Spark job."""
+    import shutil
+
+    writer = CheckpointedTable(str(tmp_path / "writer"),
+                               bucket_key="content_hash", n_buckets=4)
+    writer.append(_ts_rows(spark, 1), "r0")
+    shutil.copytree(writer.path, str(tmp_path / "t"))
+    tbl = CheckpointedTable(str(tmp_path / "t"), bucket_key="content_hash",
+                            n_buckets=4)
+    assert tbl.read(spark).count() == 10  # registers the catalog entry
+
+    # the other process commits r1: its run dir, then the 2-run manifest
+    writer.append(_ts_rows(spark, 2, run=1), "r1")
+    shutil.copytree(writer.run_dir("r1"), tbl.run_dir("r1"))
+    shutil.copy(writer.manifest_path, tbl.manifest_path)
+    assert tbl.committed_runs() == ["r0", "r1"]
+    assert tbl.read(spark).count() == 20
+
+    sc = spark.sparkContext
+    sc.setJobGroup("registered_read", "read of registered runs")
+    try:
+        tbl.read(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("registered_read") == []
+
+
 # ---------------------------------------------- replace() self-insert
 
 

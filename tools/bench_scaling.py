@@ -1,20 +1,24 @@
 """N -> 4N scaling-efficiency evidence (north rule, sandbox protocol).
 
 No real multi-executor cluster exists here, so per BASELINE.md §(c) the
-same extraction job runs on the same input at two local parallelism
-levels — standing in for N and 4N executors. Writes BENCH/BASELINE.md.
+same extraction pass (``bench.extraction_pass``) runs on the same input
+at two local parallelism levels — N = cores // 4 and 4N, with
+cores taken from the process's CPU affinity — standing in for N and 4N
+executors.
 
-PAIRED-INTERLEAVED protocol (v2): this host shows minute-scale external
+PAIRED-INTERLEAVED protocol: this host shows minute-scale external
 load drift (identical runs vary up to 12x minutes apart), so measuring
 the two levels in separate, minutes-apart processes is noise-dominated.
 Instead both JVMs are kept alive simultaneously (each idle while the
 other runs) and timed runs ALTERNATE back-to-back: N, 4N, N, 4N, ... —
 every efficiency pair is measured seconds apart under near-identical
-host conditions. Reported: per-pair efficiencies, their median, and the
-best-vs-best ratio; host loadavg is recorded per run so interference is
-visible in the table, not hidden.
+host conditions. Prints ONE JSON line: raw per-pair, overhead-adjusted
+and best-vs-best efficiencies, per-run seconds and loadavg, and the
+host's own pure-CPU N -> 4N ceiling.
 
 Usage: python tools/bench_scaling.py [n_docs] [n_pairs]
+  n_docs defaults to bench.py's N_DOCS; n_pairs to 5. RUN ALONE —
+  concurrent jobs pollute the numbers.
 """
 
 from __future__ import annotations
@@ -27,92 +31,44 @@ import sys
 import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+import bench  # noqa: E402
 
 WORKER = r"""
-import json, sys, time
+import json, os, sys, time
 sys.path.insert(0, %(repo)r)
-cores = int(sys.argv[1]); n_docs = int(sys.argv[2]); model = sys.argv[3]
-shape = sys.argv[4] if len(sys.argv) > 4 else "corpus"
-import os
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
+cores, n_docs = int(sys.argv[1]), int(sys.argv[2])
+# two JVMs live side by side for the whole measurement: cap each heap
+# (at the default 50k docs, 1 -> 4 cores, both together peak near 4.2 GB RSS)
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
+from bench import extraction_pass
+from xs_vlm_ocr_spark.corpus import gen_docs_df
 from xs_vlm_ocr_spark.session import get_spark
-from xs_vlm_ocr_spark.corpus import gen_docs_df, gen_interleave_docs_df
-from xs_vlm_ocr_spark.operators.extraction import (
-    extract_spans, split_extraction_output, valid_docs, with_content_hash)
-from xs_vlm_ocr_spark.operators.skew import repartition_by_doc_length
-
-if shape == "interleave":
-    # driver-shaped docs (html boilerplate + media + plain text span):
-    # the workload where the Arrow-bypass transport cut is largest
-    gen_docs_df = gen_interleave_docs_df
-
-if model == "noop":
-    # identity extractor on the SAME physical plan the real model runs
-    # (Arrow-bypass scalar UDF: pruned carry -> ArrowEvalPython -> JVM
-    # assembly) with zero per-token python compute — heavy html/pdf
-    # bytes are echoed back, text/media spans pass through JVM-side.
-    # This is the engine-overhead CONTROL: if this pair scales, Spark's
-    # machinery + the bypass boundary are not the high-core bottleneck
-    # and the residual is the real extractor's compute.
-    from xs_vlm_ocr_spark.strategies import REGISTRY
-    def _noop(codes, offs, heavy, blanks):
-        order = sorted(range(len(codes)), key=offs.__getitem__)
-        o_texts, o_src = [], []
-        for i in order:
-            if heavy[i] is not None:
-                o_texts.append(heavy[i]); o_src.append(-1)
-            else:
-                o_texts.append(None); o_src.append(i)
-        return o_texts, o_src
-    REGISTRY["noop"] = _noop
-
-if model == "cpuburn":
-    # pure-register CPU control: ~0.4 ms of arithmetic per doc, near-zero
-    # memory traffic, tiny output serde. If THIS pair scales, the cores
-    # are real and Spark's 32-way scheduling is sound — combined with a
-    # failing noop (serde-only) control it pins the residual on memory
-    # bandwidth, which on a real 4N cluster scales with nodes.
-    from xs_vlm_ocr_spark.strategies import REGISTRY
-    def _burn(codes, offs, heavy, blanks):
-        x = 1
-        for _ in range(4000):
-            x = (x * 1103515245 + 12345) & 0xFFFFFFFF
-        return [str(x)], [-1]
-    REGISTRY["cpuburn"] = _burn
 
 spark = get_spark(f"bench_scaling_{cores}", cores=cores, shuffle_partitions=cores)
 docs = gen_docs_df(spark, n_docs).persist()
-assert docs.count() == n_docs
 # tiny same-shape corpus: measures the per-run FIXED overhead (job
 # scheduling, skew-stats sampling jobs, arrow/python round-trip floor)
 # that is identical at both parallelism levels and does not shrink with
 # cores -- reported so an overhead-adjusted efficiency can be computed
 tiny = gen_docs_df(spark, 2000).persist()
-assert tiny.count() == 2000
+assert docs.count() == n_docs and tiny.count() == 2000
 
-def run_src(src, n_expect):
+def timed(src, n):
     t0 = time.monotonic()
-    jobs = repartition_by_doc_length(with_content_hash(valid_docs(src), model), cores * 3)
-    results, _ = split_extraction_output(extract_spans(jobs, model))
-    # noop write fully evaluates every column; a bare count() would
-    # column-prune the bypass UDF out of the plan and time an empty scan
-    results.write.format("noop").mode("overwrite").save()
-    n = results.count()
-    assert n == n_expect
+    assert extraction_pass(src, cores) == n
     return time.monotonic() - t0
-
-def run_once():
-    return run_src(docs, n_docs)
 
 print("READY", flush=True)
 for line in sys.stdin:
     cmd = line.strip()
     if cmd == "run":
-        sec = run_once()
-        load = open("/proc/loadavg").read().split()[0]
-        print(json.dumps({"sec": sec, "load": load}), flush=True)
+        sec = timed(docs, n_docs)
+        print(json.dumps({"sec": round(sec, 3),
+                          "load": round(os.getloadavg()[0], 1)}), flush=True)
     elif cmd == "t0":
-        sec = min(run_src(tiny, 2000) for _ in range(3))
+        sec = min(timed(tiny, 2000) for _ in range(3))
         print(json.dumps({"sec": sec}), flush=True)
     elif cmd == "quit":
         break
@@ -130,15 +86,14 @@ class Worker:
     # socket) — kill the pair and remeasure rather than hang the bench
     CMD_TIMEOUT = 600.0
 
-    def __init__(self, cores: int, n_docs: int,
-                 model: str = "main_content_v1", shape: str = "corpus") -> None:
+    def __init__(self, cores: int, n_docs: int) -> None:
         self.cores = cores
-        self.errlog = os.path.join(
-            tempfile.gettempdir(), f"bench_scaling_{cores}_{model}_{shape}.stderr")
+        self.errlog = os.path.join(tempfile.gettempdir(),
+                                   f"bench_scaling_{cores}.stderr")
         self._errfile = open(self.errlog, "w")  # closed in quit()
         self.proc = subprocess.Popen(
             [sys.executable, "-u", "-c", WORKER % {"repo": REPO},
-             str(cores), str(n_docs), model, shape],
+             str(cores), str(n_docs)],
             stdin=subprocess.PIPE, stdout=subprocess.PIPE,
             stderr=self._errfile, text=True,
         )
@@ -196,10 +151,9 @@ class Worker:
 
 
 def measure_pair(n: int, n4: int, n_docs: int, n_pairs: int,
-                 model: str = "main_content_v1", shape: str = "corpus",
                  _retry: bool = True) -> dict:
-    wl = Worker(n, n_docs, model, shape)
-    wh = Worker(n4, n_docs, model, shape)
+    wl = Worker(n, n_docs)
+    wh = Worker(n4, n_docs)
     try:
         wl.run(); wh.run()  # warmup: JVM JIT + python worker pool spin-up
         t0_lo, t0_hi = wl.t0(), wh.t0()  # per-level fixed overhead
@@ -215,9 +169,9 @@ def measure_pair(n: int, n4: int, n_docs: int, n_pairs: int,
         wl.quit(); wh.quit()
         if not _retry:
             raise
-        print(f"[bench_scaling] retrying pair {n}->{n4} ({model}/{shape})",
+        print(f"[bench_scaling] retrying pair {n}->{n4}",
               file=sys.stderr, flush=True)
-        return measure_pair(n, n4, n_docs, n_pairs, model, shape, _retry=False)
+        return measure_pair(n, n4, n_docs, n_pairs, _retry=False)
     finally:
         wl.quit(); wh.quit()
     pair_effs = [lo["sec"] / hi["sec"] / 4.0 for lo, hi in zip(lows, highs)]
@@ -232,31 +186,26 @@ def measure_pair(n: int, n4: int, n_docs: int, n_pairs: int,
     best_lo = min(r["sec"] for r in lows)
     best_hi = min(r["sec"] for r in highs)
     return {
-        "n": n, "n4": n4, "n_docs": n_docs, "model": model, "shape": shape,
-        "t0_lo": t0_lo, "t0_hi": t0_hi,
-        "lows": lows, "highs": highs, "pair_effs": pair_effs,
-        "adj_effs": adj_effs,
-        "median_eff": sorted(pair_effs)[len(pair_effs) // 2],
-        "median_adj_eff": sorted(adj_effs)[len(adj_effs) // 2],
-        "best_eff": best_lo / best_hi / 4.0,
-        "low_dps": n_docs / best_lo, "high_dps": n_docs / best_hi,
+        "n": n, "n4": n4, "n_docs": n_docs,
+        "median_eff": round(sorted(pair_effs)[len(pair_effs) // 2], 3),
+        "median_adj_eff": round(sorted(adj_effs)[len(adj_effs) // 2], 3),
+        "best_eff": round(best_lo / best_hi / 4.0, 3),
+        "pair_effs": [round(e, 3) for e in pair_effs],
+        "adj_effs": [round(e, 3) for e in adj_effs],
+        "t0_lo": round(t0_lo, 3), "t0_hi": round(t0_hi, 3),
+        "lows": lows, "highs": highs,
+        "low_dps": round(n_docs / best_lo, 1),
+        "high_dps": round(n_docs / best_hi, 1),
     }
 
 
-def _fmt_runs(rows: list[dict]) -> str:
-    return ", ".join(f'{r["sec"]:.2f} (load {r["load"]})' for r in rows)
-
-
-def host_cpu_ceiling(n: int, n4: int, dur: float = 12.0) -> dict:
+def host_cpu_ceiling(n: int, n4: int, dur: float = 12.0) -> float:
     """The HOST's own n->4n pure-CPU scaling ceiling, with zero Spark and
     near-zero memory traffic: run `k` plain python processes doing
     register arithmetic for `dur` seconds, sum iterations, compare
-    aggregates. On this virtualized single-socket box the 8->32 ratio is
-    measurably below 4x (hypervisor scheduling / all-core frequency) —
-    the hard upper bound ANY 8->32 measurement here can reach."""
-    import subprocess as sp
-    import tempfile
-
+    aggregates. On a virtualized box the ratio can sit measurably below
+    4x (hypervisor scheduling, all-core frequency, CPU steal) — the hard
+    upper bound ANY n->4n measurement here can reach."""
     prog = (
         "import sys,time\n"
         "end=time.monotonic()+float(sys.argv[1]); n=0; x=1\n"
@@ -265,293 +214,27 @@ def host_cpu_ceiling(n: int, n4: int, dur: float = 12.0) -> dict:
         "    n+=10000\n"
         "print(n)\n"
     )
-    with tempfile.NamedTemporaryFile("w", suffix=".py", delete=False) as f:
-        f.write(prog)
-        path = f.name
 
     def agg(k: int) -> int:
-        procs = [sp.Popen([sys.executable, path, str(dur)], stdout=sp.PIPE,
-                          text=True) for _ in range(k)]
+        procs = [subprocess.Popen([sys.executable, "-c", prog, str(dur)],
+                                  stdout=subprocess.PIPE, text=True)
+                 for _ in range(k)]
         return sum(int(p.communicate()[0]) for p in procs)
 
-    a_n, a_n4 = agg(n), agg(n4)
-    os.unlink(path)
-    return {"n": n, "n4": n4, "agg_n": a_n, "agg_n4": a_n4,
-            "ceiling": a_n4 / a_n / (n4 / n)}
-
-
-# Every committed full run of this tool (median efficiencies; raw data
-# in git history at the listed commit). Append a row after committing a
-# new run so the evidence shows run-to-run variance, not one draw.
-RUN_HISTORY: list[dict] = [
-    {"run": "2026-08-17 a", "commit": "866704d", "ceiling": 0.783,
-     "pair28": (0.892, 0.939), "real82": (0.425, 0.457),
-     "burn": 0.674, "noop": 0.243},
-    {"run": "2026-08-17 b", "commit": "11e533c", "ceiling": 0.849,
-     "pair28": (0.924, 0.954), "real82": (0.488, 0.502),
-     "burn": 0.665, "noop": 0.135},
-    {"run": "2026-08-17 c", "commit": "8e6f9a0", "ceiling": 0.728,
-     "pair28": (0.895, 0.941), "real82": (0.422, 0.429),
-     "burn": 0.614, "noop": 0.136},
-    # first run with the round-4 Arrow-bypass engine + noop-write forcing
-    # (earlier runs' absolute times are not comparable: count() used to
-    # prune the JVM-side span assembly out of the timed plan)
-    {"run": "2026-08-17 d", "commit": "03fcfc9", "ceiling": 0.798,
-     "pair28": (0.837, 0.876), "real82": (0.653, 0.690),
-     "il82": (0.469, 0.617), "burn": 0.494, "noop": 0.336},
-    # run e: heaviest co-tenant load of any committed run (5-17 external
-    # on the N-side windows) — efficiency medians are contention floors,
-    # absolute throughput peaked anyway (204.7k docs/s interleave at 32;
-    # see BENCH/round_notes.md). First run with the bypass-plan-matched
-    # noop control and 3.2M-doc interleave pair (not comparable to d's).
-    {"run": "2026-08-17 e", "commit": "4f346d1", "ceiling": 0.772,
-     "pair28": (0.793, 0.824), "real82": (0.417, 0.420),
-     "il82": (0.477, 0.489), "burn": 0.583, "noop": 0.219},
-    # run f: split-personality window — the 2->8 pair ran at loadavg 3-5
-    # and delivers the first RAW 0.8-target pass on record (0.895 /
-    # 1.042 adjusted); the 8->32 pairs ran under loadavg 15-33 co-tenant
-    # load and are contention floors (same-run cpu-burn hit 108% of a
-    # ceiling measured before the window turned — the two probes
-    # bracketed different host states).
-    {"run": "2026-08-18 f", "commit": "97feb22", "ceiling": 0.764,
-     "pair28": (0.895, 1.042), "real82": (0.301, 0.308),
-     "il82": (0.503, 0.519), "burn": 0.822, "noop": 0.328},
-    # run g: launched at 1-min loadavg 0.07, the quietest window of the
-    # build — second consecutive raw 2->8 PASS; 8->32 real back in the
-    # a-c band (f's 0.301 acquitted as co-tenant load); new absolute
-    # bests (interleave 227.4k docs/s @32, corpus pair 51.5k @32).
-    {"run": "2026-08-18 g", "commit": "8164098", "ceiling": 0.774,
-     "pair28": (0.876, 0.922), "real82": (0.469, 0.488),
-     "il82": (0.540, 0.558), "burn": 0.582, "noop": 0.211},
-]
+    return round(agg(n4) / agg(n) / (n4 / n), 3)
 
 
 def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 800_000
+    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else bench.N_DOCS
     n_pairs = int(sys.argv[2]) if len(sys.argv) > 2 else 5
-    ceiling = host_cpu_ceiling(8, 32)
-    results = [
-        measure_pair(2, 8, n_docs // 2, n_pairs),
-        measure_pair(8, 32, n_docs, n_pairs),
-        # driver-shaped interleave docs (html boilerplate + media + plain
-        # text): the workload where the Arrow-bypass transport cut is
-        # largest; docs are smaller, so 4x the count keeps per-core work
-        # comparable (run d used 2x; its 4N runs were short enough that
-        # overhead dominated the raw ratio — hence raw 0.469 vs adjusted
-        # 0.617)
-        measure_pair(8, 32, n_docs * 4, n_pairs, shape="interleave"),
-        # engine-overhead CONTROL at the contested pair: identity extract,
-        # same plan/serde, zero per-token python compute
-        measure_pair(8, 32, n_docs, n_pairs, model="noop"),
-        # pure-CPU CONTROL: same plan, ~0.4 ms register arithmetic per
-        # doc, near-zero memory traffic
-        measure_pair(8, 32, n_docs, n_pairs, model="cpuburn"),
-    ]
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-
-    def _tag(r):
-        if r["model"] == "noop":
-            return " — noop CONTROL"
-        return " — interleave-shaped" if r.get("shape") == "interleave" else ""
-
-    def _tag2(r):
-        return " — cpu-burn CONTROL" if r["model"] == "cpuburn" else _tag(r)
-
-    eff_lines = "\n".join(
-        f'- **N={r["n"]} -> 4N={r["n4"]}{_tag2(r)}** ({r["n_docs"]} docs): '
-        f'median paired efficiency = **{r["median_eff"]:.3f}** '
-        f'({"PASS" if r["median_eff"] >= 0.8 else "FAIL"} vs the 0.8 target); '
-        f'overhead-adjusted median = **{r["median_adj_eff"]:.3f}** '
-        f'(fixed per-run overhead measured on a 2k-doc same-shape run: '
-        f'{r["t0_lo"]:.2f} s at N, {r["t0_hi"]:.2f} s at 4N); '
-        f'best-vs-best = {r["best_eff"]:.3f}; per-pair raw '
-        f'[{", ".join(f"{e:.2f}" for e in r["pair_effs"])}], adjusted '
-        f'[{", ".join(f"{e:.2f}" for e in r["adj_effs"])}]'
-        for r in results
-    )
-    rows = []
-    for r in results:
-        rows.append(
-            f'| local[{r["n"]}]  (N) @ {r["n_docs"]} docs{_tag2(r)} | '
-            f'{min(x["sec"] for x in r["lows"]):.2f} | {r["low_dps"]:.1f} | '
-            f'{_fmt_runs(r["lows"])} |'
-        )
-        rows.append(
-            f'| local[{r["n4"]}] (4N) @ {r["n_docs"]} docs{_tag2(r)} | '
-            f'{min(x["sec"] for x in r["highs"]):.2f} | {r["high_dps"]:.1f} | '
-            f'{_fmt_runs(r["highs"])} |'
-        )
-    table = "\n".join(rows)
-
-    real_82 = next(r for r in results
-                   if r["n"] == 8 and r["model"] == "main_content_v1"
-                   and r.get("shape") == "corpus")
-    il_82 = next((r for r in results if r.get("shape") == "interleave"
-                  and r["model"] == "main_content_v1"), None)
-    noop = next((r for r in results if r["model"] == "noop"), None)
-    burn = next((r for r in results if r["model"] == "cpuburn"), None)
-    def _il(h):
-        return (f'{h["il82"][0]:.3f} / {h["il82"][1]:.3f}'
-                if h.get("il82") else "—")
-
-    hist_rows = [
-        f'| {h["run"]} | {h["commit"]} | {h["ceiling"]:.3f} | '
-        f'{h["pair28"][0]:.3f} / {h["pair28"][1]:.3f} | '
-        f'{h["real82"][0]:.3f} / {h["real82"][1]:.3f} | {_il(h)} | '
-        f'{h["burn"]:.3f} '
-        f'({h["burn"] / h["ceiling"]:.0%}) | {h["noop"]:.3f} |'
-        for h in RUN_HISTORY
-    ]
-    hist_rows.append(
-        f'| this run | HEAD | {ceiling["ceiling"]:.3f} | '
-        f'{results[0]["median_eff"]:.3f} / {results[0]["median_adj_eff"]:.3f} | '
-        f'{real_82["median_eff"]:.3f} / {real_82["median_adj_eff"]:.3f} | '
-        + (f'{il_82["median_eff"]:.3f} / {il_82["median_adj_eff"]:.3f} | '
-           if il_82 is not None else "— | ")
-        + (f'{burn["median_adj_eff"]:.3f} '
-           f'({burn["median_adj_eff"] / ceiling["ceiling"]:.0%}) | '
-           if burn is not None else "— | ")
-        + (f'{noop["median_adj_eff"]:.3f} |' if noop is not None else "— |")
-    )
-    hist_md = "\n".join(hist_rows)
-    all_fracs = [h["burn"] / h["ceiling"] for h in RUN_HISTORY]
-    all_ceils = [h["ceiling"] for h in RUN_HISTORY]
-    if burn is not None:
-        all_fracs.append(burn["median_adj_eff"] / ceiling["ceiling"])
-    all_ceils.append(ceiling["ceiling"])
-    parts = [f"""
-**Host CPU ceiling (no Spark involved).** `host_cpu_ceiling(8, 32)`
-runs 8 then 32 plain python register-arithmetic processes (zero memory
-traffic, zero Spark) and compares aggregate throughput: 4x the
-processes deliver only {ceiling["agg_n4"] / ceiling["agg_n"]:.2f}x the
-work — a measured **{ceiling["ceiling"]:.3f}** hard ceiling on ANY
-8->32 efficiency this virtualized single-socket box can exhibit
-(hypervisor scheduling + all-core frequency behavior; /proc/stat shows
-nonzero steal). Every 8->32 number below is bounded by it."""]
-    if noop is not None and burn is not None:
-        parts.append(f"""
-**Control experiments (8 -> 32, same plan, substituted extractor).**
-Two controls isolate WHERE the real pair's {real_82["median_eff"]:.3f}
-comes from:
-
-1. *cpu-burn* (~0.4 ms pure register arithmetic per doc, near-zero
-   memory traffic): median efficiency **{burn["median_eff"]:.3f}**.
-2. *noop* (identity extract: scan + content hash + Arrow serde both
-   ways, zero per-token compute): median efficiency
-   **{noop["median_eff"]:.3f}** raw / **{noop["median_adj_eff"]:.3f}**
-   overhead-adjusted. The noop job is short enough that the measured
-   fixed per-run overhead ({noop["t0_lo"]:.2f} s — job scheduling,
-   skew-stat sampling, python-worker floor; identical at both levels)
-   is a large fraction of its runtime, which is why the adjusted number
-   is the meaningful one for this control.""")
-        frac = burn["median_adj_eff"] / max(ceiling["ceiling"], 1e-9)
-        parts.append(f"""
-**Run history** (every committed full run of this tool, oldest first;
-the per-run raw data for each is in git history at the listed commit):
-
-| run | commit | host ceiling | 2->8 raw/adj | 8->32 raw/adj | 8->32 interleave raw/adj | cpu-burn adj (of ceiling) | noop adj |
-|---|---|---|---|---|---|---|---|
-{hist_md}
-
-Reading: this run's cpu-burn control reaches **{frac:.0%}** of its
-same-run host ceiling; across committed runs the control lands at
-**{min(all_fracs):.0%}-{max(all_fracs):.0%}** of a ceiling that itself
-swings **{min(all_ceils):.3f}-{max(all_ceils):.3f}** hour-to-hour on
-this shared VM — the gap between Spark's 32-way scheduling and the
-box's own pure-CPU best case is the same magnitude as the host's
-run-to-run variance. The noop control shows where the real job's
-remaining gap lives: the bandwidth-bound stages (cached-scan decode +
-Arrow transport move the document bytes over one socket's memory
-controller). Cutting that transport has moved the real pair every time
-it was tried: computing full_text JVM-side lifted 0.425 -> 0.488
-(runs a -> b), and the round-4 Arrow-bypass plan (only html/pdf payload
-bytes cross into Python; text/media spans resolved JVM-side) lifted it
-to 0.653/0.690 (run d) — while ALSO beating the same-run ship-all A/B
-control in absolute time on both shapes (corpus 1.6-1.8x, interleave
-2.6-4.4x). Neither CPU-clock behavior nor single-socket memory bandwidth is
-a property of the engine's plan: on a real 4N cluster both scale with
-the node count (each executor brings its own socket, bus and disks),
-the plan has no single-box assumption — no driver-side loops, no global
-sorts, linear equi-joins only (PLAN_AUDIT.md) — and the low-contention
-2->8 pair, which IS the multi-node-like regime, passes the 0.8 target
-in every run.
-
-Run robustness: a rare pyspark worker wedge was observed twice (one
-task of 32 permanently stuck in a socket wait while 31 finish; no OOM,
-no error). The harness detects silence, kills the pair and remeasures
-(`Worker.CMD_TIMEOUT`); on a real cluster `spark.speculation`
-re-launches exactly this straggler, and the extraction stage is a pure
-function so speculative duplicates are safe.""")
-    control_md = "\n".join(parts)
-    md = f"""# BENCH/BASELINE — scaling-efficiency evidence
-
-Protocol (BASELINE.md §c, v2 paired-interleaved): the same extraction
-job on the same deterministic corpus (seed=42) at two parallelism
-levels standing in for N and 4N executors. Both JVMs stay alive for the
-whole measurement (each idle while the other runs) and timed runs
-alternate back-to-back — N, 4N, N, 4N, ... — so every efficiency pair
-is measured seconds apart under near-identical host conditions. This
-replaced the sequential protocol because the sandbox VM shows
-minute-scale external load drift (identical runs vary up to 12x minutes
-apart; the per-run loadavg column below makes interference visible).
-One warmup run per level precedes timing (cold generated-code runs are
-up to 20x slower than JIT-warm steady state — the long-running-job
-regime the north rule targets).
-
-{eff_lines}
-
-| parallelism | best sec | docs/sec | runs sec (host loadavg before) |
-|---|---|---|---|
-{table}
-
-**Why two pairs.** The 8->32 pair runs 32 concurrent CPython extraction
-workers against one socket's memory controller — contention a real
-4N-executor cluster does not have (executors scale across nodes, each
-with its own memory subsystem). The 2->8 pair measures the same job in
-the low-contention regime and is the closer stand-in for multi-node
-scaling. All pairs are reported unedited with raw run times and loads.
-{control_md}
-Reference throughput context: the reference tool's batch mode holds 4
-requests in flight against remote OCR/VLM services (~1 s/doc best case,
-reference src/ui/MainWindow.h:226) — a ~4 docs/sec ceiling. This
-engine's deterministic extraction sustains tens of thousands of
-docs/sec on one node at the same per-doc span semantics.
-
-Skew evidence: tests/test_skew.py measures per-partition lineage on the
-skewed corpus (1% of docs ~40x cost): the adaptive hot/cold quantile
-split cuts the max task cost vs naive round-robin partitioning, and
-adds zero shuffle when sampled stats show no skew.
-
-**Per-query bench drift adjudication (round 4).** bench.py now stamps
-the 1-min loadavg and raw seconds of every timed run
-(extra.loadavg_per_run / extra.secs_per_run in BENCH_r*.json). The two
-round-3 regressions flagged on untouched code are ACQUITTED as host
-noise by load-stamped reruns: `minhash_lsh_pairs` 1.469 s (r3, no load
-data) -> 0.740-0.746 s at loadavg ~1.9 (r2 level was 0.700 s);
-`asof_join` 0.532 s -> 0.345-0.397 s at loadavg ~2.2 (r2 level
-0.301 s). No code differed on either path; the recovered numbers at
-recorded low load close round-3 What's-wrong #1.
-"""
-    # Durable hand-written sections (round-5 protocol change, deployment
-    # rehearsal, per-round sf0.1 runs) live in BENCH/round_notes.md so a
-    # regeneration of this file never clobbers them.
-    notes_path = os.path.join(REPO, "BENCH", "round_notes.md")
-    if os.path.exists(notes_path):
-        with open(notes_path) as f:
-            md += "\n" + f.read()
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
-        f.write(md)
-    print(json.dumps({
-        "host_cpu_ceiling_8_32": round(ceiling["ceiling"], 3),
-        "pairs": [
-            {"n": r["n"], "n4": r["n4"], "n_docs": r["n_docs"],
-             "model": r["model"],
-             "median_eff": round(r["median_eff"], 3),
-             "median_adj_eff": round(r["median_adj_eff"], 3),
-             "best_eff": round(r["best_eff"], 3)}
-            for r in results
-        ]
-    }))
+    cores = len(os.sched_getaffinity(0))
+    if cores < 4:
+        sys.exit(f"an N -> 4N pair needs at least 4 CPUs; this process may "
+                 f"run on {cores}")
+    n = cores // 4
+    ceiling = host_cpu_ceiling(n, 4 * n)
+    print(json.dumps({"cores": cores, "host_cpu_ceiling": ceiling,
+                      **measure_pair(n, 4 * n, n_docs, n_pairs)}))
 
 
 if __name__ == "__main__":

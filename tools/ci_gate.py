@@ -1,12 +1,12 @@
-"""One-command verification gate: pytest + benchmark smoke + CLI
-rehearsal + driver contract + plan audit + leak grep, single exit code.
-Rounds 4+ cannot silently regress any of them (round-3 verdict, stretch
-item).
+"""One-command verification gate: pytest + benchmark smoke + bench
+smoke + CLI rehearsal + driver contract + plan audit + leak grep, single
+exit code. Rounds 4+ cannot silently regress any of them (round-3
+verdict, stretch item).
 
 Usage: python tools/ci_gate.py [--fast]
-  --fast skips pytest, the benchmark smoke and the rehearsal (the
-  slowest legs) for an inner-loop gate; the full gate is the pre-commit
-  / pre-round check.
+  --fast skips pytest, the benchmark smoke, the bench smoke and the
+  rehearsal (the slowest legs) for an inner-loop gate; the full gate is
+  the pre-commit / pre-round check.
 """
 
 from __future__ import annotations
@@ -19,6 +19,7 @@ import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 # import namespaces allowed anywhere in the repo (stdlib is checked
 # separately via sys.stdlib_module_names): the sandboxed deps, the
@@ -46,10 +47,11 @@ LEAK_RES = [
 PACKAGE_RES = [r"\.rdd\b"]
 
 
-def run_leg(name: str, argv: list[str], ok_re: str) -> bool:
+def run_leg(name: str, argv: list[str], ok_re: str,
+            env: dict[str, str] | None = None) -> bool:
     t0 = time.monotonic()
     p = subprocess.run(argv, cwd=REPO, capture_output=True, text=True,
-                       timeout=3600)
+                       timeout=3600, env={**os.environ, **(env or {})})
     out = p.stdout + p.stderr
     ok = p.returncode == 0 and re.search(ok_re, out) is not None
     tail = "\n".join(out.splitlines()[-3:])
@@ -140,7 +142,6 @@ def contract_window() -> bool:
     CONSOLIDATED instead of letting it creep: this leg fails the gate
     the moment registration #51 lands, and checks queries/oracles stay
     in 1:1 correspondence while it's at it."""
-    sys.path.insert(0, REPO)
     import __spark_entry__ as entry
 
     qs, oracles = entry.queries(), entry.oracle_sql()
@@ -185,6 +186,18 @@ def main() -> None:
             [sys.executable, "perfbench/run.py", "--workload", "all",
              "--seed", "1", "--seconds", "1", "--trace", "0", "--smoke"],
             r'"correct": true, "attempted": \d+, "failed": 0'))
+        # bench.py's shared measurement protocol (time_query,
+        # extraction_pass) end to end at the small tier: exit 0 and one
+        # JSON line carrying all ten headline query keys
+        from bench import QUERIES
+
+        legs.append(run_leg(
+            "bench smoke", [sys.executable, "bench.py"],
+            r'(?m)^\{"metric": ' + "".join(
+                f'(?=.*"{q}": )' for q in ("extract_corpus", *QUERIES)),
+            env={"SPARK_GRAFT_SF_DIR": "/root/testdata/sf0.01",
+                 "SPARK_GRAFT_BENCH_DOCS": "2000",
+                 "SPARK_GRAFT_BENCH_RUNS": "1"}))
         # crash/heal, compaction, write_deduped and stream == batch on
         # the job_main.py CLI, one cold process per pass
         with tempfile.TemporaryDirectory(prefix="rehearsal_") as wd:

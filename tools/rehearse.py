@@ -296,12 +296,6 @@ def main() -> None:
         line = {"pass": name, "wall_s": round(wall, 1),
                 "loadavg": round(os.getloadavg()[0], 1), **summary}
         if check:
-            # this session registered the bucketed tables before the CLI
-            # committed new run partitions: drop the (external) catalog
-            # entries so each read re-registers from the files
-            for t in spark.catalog.listTables():
-                if t.name.startswith("ckpt_"):
-                    spark.sql(f"DROP TABLE {t.name}")
             job = ExtractionJob(out, near_dup_threshold=float(THRESHOLD),
                                 heldout_dir=paths["heldout"], compute_signals=True)
             line.update(check(r, summary, job) or {})

@@ -42,10 +42,11 @@ def get_spark(
         # user.language pin: Java toLowerCase is default-locale-sensitive
         # (tr/az dotted-I), Python str.lower() is not — the gram
         # tokenizer's parity with its Python spec (tests/oracles.py)
-        # assumes a root-like locale on the JVM side
+        # assumes a root-like locale on the JVM side. ConcGCThreads may not
+        # exceed ParallelGCThreads: the JVM refuses to start at cores=1
         .config(
             "spark.driver.extraJavaOptions",
-            f"-XX:ParallelGCThreads={min(8, cores)} -XX:ConcGCThreads=2"
+            f"-XX:ParallelGCThreads={min(8, cores)} -XX:ConcGCThreads={min(2, cores)}"
             " -Duser.language=en -Duser.country=US",
         )
         .config("spark.ui.enabled", "false")

@@ -45,6 +45,7 @@ import re
 import shutil
 import uuid
 from datetime import date, datetime, timedelta, timezone
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -775,16 +776,27 @@ class CheckpointedTable:
 
         self.check_layout()
         runs = self._prune_runs(self.committed_runs(), ts_start, ts_end)
-        dirs = [self.run_dir(r) for r in runs]
-        dirs = [d for d in dirs if os.path.exists(d)]
-        if not dirs:
+        live = [r for r in runs if os.path.exists(self.run_dir(r))]
+        if not live:
             return None
         if self.bucket_key is None:
-            return spark.read.option("mergeSchema", "true").parquet(*dirs)
+            return spark.read.option("mergeSchema", "true").parquet(
+                *map(self.run_dir, live))
         if not spark.catalog.tableExists(self.table_name):
             # fresh session over durable files: re-register, then recover
             # the run_id partitions from the filesystem
-            self._ensure_registered(spark, spark.read.parquet(dirs[0]).schema)
+            self._ensure_registered(
+                spark, spark.read.parquet(self.run_dir(live[0])).schema)
+        # runs another process committed after this session registered the
+        # table have no catalog partition yet, and the run_id filter below
+        # would silently drop their rows: register them (SHOW PARTITIONS
+        # is a catalog lookup on the driver, no Spark job)
+        known = {unquote(row[0].split("=", 1)[1]) for row in
+                 spark.sql(f"SHOW PARTITIONS {self.table_name}").collect()}
+        missing = [r for r in live if r not in known]
+        if missing:
+            spark.sql(f"ALTER TABLE {self.table_name} ADD IF NOT EXISTS "
+                      + " ".join(f"PARTITION (run_id='{r}')" for r in missing))
         return (
             spark.table(self.table_name)
             .filter(F.col("run_id").isin(runs))
