@@ -130,6 +130,7 @@ def main() -> None:
         ap.error("--stream-checkpoint requires --stream")
 
     from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
 
     from xs_vlm_ocr_spark.job import ExtractionJob
 
@@ -153,8 +154,6 @@ def main() -> None:
     if args.stream:
         import os
 
-        from pyspark.sql import functions as F
-
         from xs_vlm_ocr_spark.streaming.incremental import (
             start_incremental_extraction,
         )
@@ -173,18 +172,16 @@ def main() -> None:
         # mints rewrite snapshot ids; they are not micro-batches)
         run_ids = sorted(r for r in job.results.all_time_runs() - before
                          if r.startswith("stream-"))
-        lineage_pred = F.col("run_id").isin(run_ids)
     else:
         docs = spark.read.parquet(args.input)
         run_ids = [job.run(spark, docs, run_id=args.run_id,
                            target_partitions=args.partitions,
                            compact_after=args.compact_after)]
-        lineage_pred = f"run_id = '{run_ids[0]}'"
 
     results = job.read_results(spark)
     lineage = job.read_lineage(spark)  # None iff nothing ever committed
     stats = (
-        lineage.filter(lineage_pred)
+        lineage.filter(F.col("run_id").isin(run_ids))
         .groupBy().sum("docs_in", "docs_out", "span_count", "wall_ms").first()
         if lineage is not None else (None, None, None, None)
     )

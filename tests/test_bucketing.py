@@ -3,11 +3,8 @@ bucketed (big) side — only the probe side exchanges."""
 
 import pyspark.sql.functions as F
 
-from xs_vlm_ocr_spark.operators.bucketing import (
-    n_shuffle_exchanges,
-    read_bucketed,
-    write_bucketed,
-)
+from xs_vlm_ocr_spark.operators.bucketing import n_shuffle_exchanges
+from xs_vlm_ocr_spark.table_io import CheckpointedTable
 
 
 def test_bucketed_join_skips_big_side_shuffle(spark, tmp_path):
@@ -24,8 +21,10 @@ def test_bucketed_join_skips_big_side_shuffle(spark, tmp_path):
         plain = committed.join(probe, "content_hash")
         n_plain = n_shuffle_exchanges(plain)
 
-        write_bucketed(committed, "committed_bucketed", "content_hash", 8)
-        bucketed = read_bucketed(spark, "committed_bucketed").join(probe, "content_hash")
+        table = CheckpointedTable(str(tmp_path / "committed"),
+                                  bucket_key="content_hash", n_buckets=8)
+        table.append(committed, "r0")
+        bucketed = table.read(spark).join(probe, "content_hash")
         n_bucketed = n_shuffle_exchanges(bucketed)
 
         # plain SMJ shuffles both sides; bucketed shuffles only the probe
@@ -39,7 +38,6 @@ def test_bucketed_join_skips_big_side_shuffle(spark, tmp_path):
         assert got == expected and len(got) > 0
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.sql("DROP TABLE IF EXISTS committed_bucketed")
 
 
 def test_job_resume_probe_committed_side_exchange_free(spark, tmp_path_factory):
@@ -87,11 +85,17 @@ def test_job_resume_probe_committed_side_exchange_free(spark, tmp_path_factory):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
 
 
-def test_bucketed_results_survive_fresh_session_catalog(spark, tmp_path_factory):
+def test_bucketed_results_survive_fresh_session_catalog(spark, tmp_path_factory,
+                                                       monkeypatch):
     """The catalog is per-session (in-memory) but the TABLE is the
     files: after the catalog entry disappears (new driver resuming a
     crashed job), read() re-registers the external table over the
-    existing data dir and recovers its run_id partitions."""
+    existing data dir and registers the manifest's committed runs as
+    its run_id partitions — never the dir a crashed run left behind."""
+    import os
+
+    import pytest
+
     from xs_vlm_ocr_spark.corpus import gen_docs_df
     from xs_vlm_ocr_spark.job import ExtractionJob
 
@@ -100,12 +104,25 @@ def test_bucketed_results_survive_fresh_session_catalog(spark, tmp_path_factory)
     job.run(spark, gen_docs_df(spark, 40))
     before = {r["doc_id"] for r in job.read_results(spark).select("doc_id").collect()}
 
+    # a crashed run: its results dir is written, the manifest never flips
+    def crash(*_a, **_k):
+        raise OSError("crash before the manifest rename")
+
+    monkeypatch.setattr(job.results, "_commit", crash)
+    with pytest.raises(OSError):
+        job.run(spark, gen_docs_df(spark, 60), run_id="crashed")
+    monkeypatch.undo()
+    assert os.path.isdir(job.results.run_dir("crashed"))
+
     # simulate the new session: drop only the catalog entry (external
     # table: data stays), then read again
     spark.sql(f"DROP TABLE {job.results.table_name}")
     after_df = job.read_results(spark)
     after = {r["doc_id"] for r in after_df.select("doc_id").collect()}
     assert after == before and len(after) == 40
+    partitions = {row[0].split("=", 1)[1] for row in spark.sql(
+        f"SHOW PARTITIONS {job.results.table_name}").collect()}
+    assert partitions == set(job.results.committed_runs())
     # and the re-registered scan is still bucketed (join adds no
     # exchange on this side)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

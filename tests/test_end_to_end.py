@@ -117,6 +117,24 @@ def test_staging_deleted_once_run_commits(spark, tmp_path_factory):
     assert job.read_results(spark).count() == 30
 
 
+def test_unsafe_run_id_refused_before_any_write(spark, tmp_path_factory):
+    """A caller's run id names the staging dir and a results run dir.
+    '../results' resolves the staging write onto the committed results
+    table, which the post-commit staging cleanup then deletes: it is
+    refused before anything is written, and the table stays intact."""
+    out = str(tmp_path_factory.mktemp("job_run_id"))
+    job = ExtractionJob(out)
+    job.run(spark, gen_docs_df(spark, 20), run_id="r0")
+    with open(job.results.manifest_path) as f:
+        manifest = f.read()
+
+    with pytest.raises(ValueError, match=r"\.\./results"):
+        job.run(spark, gen_docs_df(spark, 30), run_id="../results")
+    with open(job.results.manifest_path) as f:
+        assert f.read() == manifest
+    assert job.read_results(spark).count() == 20
+
+
 def _observed_runtime_empty_write(spark, path):
     """Observed count of a write whose join side is empty only at run
     time: AQEPropagateEmptyRelation would replan the join as an empty

@@ -388,6 +388,24 @@ def test_bucketed_schema_guard_survives_fresh_session_catalog(spark, tmp_path_fa
         fresh.append(_ts_rows(spark, 2).withColumn("lang", F.lit("x")), "r1")
 
 
+def test_unsafe_run_id_refused_before_any_write(spark, tmp_path):
+    """Spark escapes ':' in a partition dir (run_id=...T07%3A00...), so a
+    bucketed run under a timestamp id lands where run_dir() never looks:
+    it would commit and then read as empty. Such an id is refused
+    before anything is written or committed."""
+    import os
+
+    tbl = CheckpointedTable(str(tmp_path / "t"), bucket_key="content_hash",
+                            n_buckets=4)
+    tbl.append(_ts_rows(spark, 1), "r0")
+    with pytest.raises(ValueError, match="2026-10-19T07:00:00"):
+        tbl.append(_ts_rows(spark, 2, run=1), "2026-10-19T07:00:00")
+    assert tbl.committed_runs() == ["r0"]
+    assert [d for d in os.listdir(tbl.data_dir)
+            if d.startswith("run_id=")] == ["run_id=r0"]
+    assert tbl.read(spark).count() == 10
+
+
 def test_bucketed_read_sees_runs_committed_by_another_process(spark, tmp_path):
     """A session that already read a bucketed table must still see runs
     another process commits later: the read registers every committed

@@ -40,11 +40,18 @@ LEAK_RES = [
     r"hooks\.slack\.com|internal\.[a-z]+\.net|\.corp\.",
     r"(?i)password\s*=\s*['\"][^'\"]+['\"]",
 ]
-# scale anti-patterns barred from the PACKAGE (not tests/tools): .rdd on
-# a DataFrame forces physical planning of the whole upstream plan on the
-# driver (round-6 verdict Wrong #1) — the planning-free probes are
-# inputFiles() / defaultParallelism
-PACKAGE_RES = [r"\.rdd\b"]
+# patterns barred from the PACKAGE (not tests/tools), each mapped to the
+# package files allowed to carry it. .rdd on a DataFrame forces physical
+# planning of the whole upstream plan on the driver (round-6 verdict
+# Wrong #1) — the planning-free probes are inputFiles() /
+# defaultParallelism. bucketBy( / saveAsTable( write a bucketed table,
+# which only CheckpointedTable's one run writer may do: a second
+# bucketed writer would bypass its manifest commit and layout record.
+PACKAGE_RES = {
+    r"\.rdd\b": (),
+    r"\bbucketBy\(": ("xs_vlm_ocr_spark/table_io.py",),
+    r"\bsaveAsTable\(": ("xs_vlm_ocr_spark/table_io.py",),
+}
 
 
 def run_leg(name: str, argv: list[str], ok_re: str,
@@ -78,11 +85,12 @@ def leak_grep() -> bool:
                     # empty api_key fields; only flag non-empty literals
                     bad.append(f"{path}: {m.group(0)[:60]}")
             if os.sep + "xs_vlm_ocr_spark" + os.sep in path:
-                for rex in PACKAGE_RES:
+                rel = os.path.relpath(path, REPO).replace(os.sep, "/")
+                for rex, allowed in PACKAGE_RES.items():
+                    if rel in allowed:
+                        continue
                     for m in re.finditer(rex, src):
-                        bad.append(
-                            f"{path}: scale anti-pattern '{m.group(0)}'"
-                        )
+                        bad.append(f"{path}: barred in the package '{m.group(0)}'")
             for m in IMPORT_RE.finditer(src):
                 mod = m.group(1) or m.group(2)
                 if mod not in ALLOWED_IMPORTS and mod not in sys.stdlib_module_names:

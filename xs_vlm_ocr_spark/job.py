@@ -37,7 +37,8 @@ from xs_vlm_ocr_spark.operators.extraction import (
 )
 from xs_vlm_ocr_spark.operators.skew import repartition_by_doc_length
 from xs_vlm_ocr_spark.schemas import LINEAGE_SCHEMA
-from xs_vlm_ocr_spark.table_io import REWRITE_PREFIXES, CheckpointedTable
+from xs_vlm_ocr_spark.table_io import (REWRITE_PREFIXES, CheckpointedTable,
+                                       check_run_id)
 
 
 # ONE hold per session, shared by every overlapping observed write:
@@ -185,7 +186,7 @@ class ExtractionJob:
             os.path.join(out_dir, "results"), bucket_key="content_hash",
             stats_col="ts",
         )
-        self.lineage = CheckpointedTable(os.path.join(out_dir, "lineage"), LINEAGE_SCHEMA)
+        self.lineage = CheckpointedTable(os.path.join(out_dir, "lineage"))
         # Near-dup ingestion loop (round-6 directive 2): when a
         # threshold is set, every committed run's extracted text is (a)
         # PROBED against the persisted MinHash band index — committed
@@ -354,6 +355,10 @@ class ExtractionJob:
         """Execute + commit one run; returns run_id. ``fail_after_staging``
         simulates a crash between write and commit (resume tests).
 
+        ``run_id`` (default: a fresh uuid) names the staging dir and the
+        results run dir, so an id that fails ``table_io.check_run_id``
+        raises ValueError before any Spark action.
+
         ``compact_after``: compaction POLICY — after this run commits,
         any output table holding more than N committed runs is merged
         into one snapshot (CheckpointedTable.maybe_compact), bounding
@@ -371,7 +376,7 @@ class ExtractionJob:
         have committed."""
         from pyspark.sql import Observation
 
-        run_id = run_id or uuid.uuid4().hex[:12]
+        run_id = check_run_id(run_id or uuid.uuid4().hex[:12])
         committed_at = datetime.now(timezone.utc).replace(tzinfo=None)  # UTC session
         committed_before = self.results.read(spark) if self.replay_hits else None
         obs = Observation(f"invalid_{run_id}")

@@ -6,30 +6,15 @@ committed side should never be re-shuffled. Writing the results table
 bucketed by content_hash makes Spark read it pre-partitioned: only the
 (small) probe side exchanges, the bucketed side scans in place.
 
-Sandbox note: bucket metadata lives in the session catalog
-(saveAsTable); on a real deployment this is the Iceberg table's
-bucket(content_hash, N) partition transform — same semantics, same
-1:1 swap as table_io.CheckpointedTable.
+The one bucketed writer is ``table_io.CheckpointedTable(bucket_key=...)``
+(bucket metadata in the session catalog; on a real deployment the
+Iceberg table's bucket(content_hash, N) partition transform). This
+module keeps the plan diagnostic the bucketing tests assert with.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-
-def write_bucketed(df: DataFrame, table_name: str, key: str, n_buckets: int = 32,
-                   mode: str = "overwrite") -> None:
-    (
-        df.write.bucketBy(n_buckets, key)
-        .sortBy(key)
-        .mode(mode)
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
-
-
-def read_bucketed(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)
+from pyspark.sql import DataFrame
 
 
 def n_shuffle_exchanges(df: DataFrame) -> int:

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from xs_vlm_ocr_spark.operators.history import latest_per_key
+
 
 def committed_hashes(results: DataFrame) -> DataFrame:
     """Distinct content hashes of successful committed results (P4:
@@ -47,19 +49,8 @@ def cache_hits(jobs: DataFrame, results: DataFrame | None) -> DataFrame | None:
     (`ts`, `id`) that ExtractionJob.run adds at append time."""
     if results is None:
         return None
-    from pyspark.sql import Window as W
-
-    latest = (
-        results.filter(F.col("success"))
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                W.partitionBy("content_hash").orderBy(F.desc("ts"), F.desc("id"))
-            ),
-        )
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    latest = latest_per_key(results.filter(F.col("success")),
+                            ["content_hash"], "ts", "id")
     probe = jobs.select("content_hash").distinct()
     return (
         latest.join(probe, "content_hash", "left_semi")

@@ -4,12 +4,28 @@ Thin stand-in for the Iceberg tables the north rule specifies (snapshot
 commit, resumability, lineage metrics table) — the sandbox has no Iceberg
 jars, so the same semantics are provided by:
 
-  * each ``append(df, run_id)`` writes parquet under
-    ``<path>/data/run_id=<id>/`` and then commits by atomically rewriting
-    ``<path>/manifest.json`` (write-temp + os.replace);
+  * ONE run writer, ``_write_run``: every write verb (``append``,
+    ``replace``, ``compact``, ``expire_before``, ``migrate``) lands its
+    rows as parquet under ``<path>/data/run_id=<id>/`` through it — the
+    only code that knows how a layout (plain or bucketed) writes a run;
+  * ONE commit point: the atomic rewrite of ``<path>/manifest.json``
+    (write-temp + os.replace) that publishes the written run. The
+    full-table rewrites (``replace`` and, through it, ``compact``;
+    ``migrate``) share ONE snapshot rewrite, ``_rewrite``: write the
+    run, flip the manifest to ``[run_id]``, vacuum the replaced runs;
   * ``read`` sees ONLY committed runs — a crashed job's partial files are
-    invisible, exactly like an uncommitted Iceberg snapshot;
+    invisible, exactly like an uncommitted Iceberg snapshot. A bucketed
+    table's catalog partitions are registered from the MANIFEST alone
+    (never from a directory listing), so crash debris under ``data/``
+    never becomes a partition;
   * resume = anti-join against ``read()`` (operators.dedup).
+
+Run ids become a directory name and a partition literal, and the job
+takes them from its caller, so each one must match
+``[A-Za-z0-9][A-Za-z0-9_.-]*`` (``check_run_id``): a '/' or '..' would
+write outside the table, and a character Spark escapes in partition
+dirs (':' -> '%3A') would land a bucketed run where ``run_dir`` never
+looks.
 
 The manifest additionally records (Iceberg metadata analogues):
 
@@ -80,6 +96,19 @@ def _to_us(v) -> int:
 # copy once ingested a whole retained corpus as a fresh increment).
 REWRITE_PREFIXES = ("compact-", "expire-", "migrate-", "retain-")
 
+_RUN_ID_RE = re.compile(r"[A-Za-z0-9][A-Za-z0-9_.-]*")
+
+
+def check_run_id(run_id: str) -> str:
+    """``run_id`` unchanged if it is a safe run id (see the module
+    docstring), else ValueError naming it — before anything is written."""
+    if not isinstance(run_id, str) or not _RUN_ID_RE.fullmatch(run_id):
+        raise ValueError(
+            f"invalid run id {run_id!r}: a run id names a directory and a "
+            "partition value, so it must match [A-Za-z0-9][A-Za-z0-9_.-]*"
+        )
+    return run_id
+
 
 class CheckpointedTable:
     """``bucket_key`` opts a table into BUCKETED layout: every run is
@@ -94,18 +123,18 @@ class CheckpointedTable:
     slots: a divisor routes every bucket to a single write task, so
     one task per core writes n_buckets / k whole buckets
     (``_bucketed_write``). The manifest stays the ONLY commit point:
-    uncommitted ``run_id=`` partitions are pruned out of every read, so
-    crash atomicity is unchanged. On a real deployment this is the Iceberg
-    ``bucket(N, content_hash)`` partition transform — same 1:1 swap as
-    the rest of this class; reference analogue: ``idx_content_hash``,
-    the reference's index on its cache-probe key
-    (src/managers/HistoryManager.cpp:70-77).
+    the catalog's ``run_id`` partitions are registered from it and every
+    read filters to its runs, so crash atomicity is unchanged. On a real
+    deployment this is the Iceberg ``bucket(N, content_hash)`` partition
+    transform — same 1:1 swap as the rest of this class; reference
+    analogue: ``idx_content_hash``, the reference's index on its
+    cache-probe key (src/managers/HistoryManager.cpp:70-77).
 
     The default (bucket_key=None) keeps plain parquet appends and
     mergeSchema evolution; bucketed tables trade mergeSchema evolution
     for layout (exactly Iceberg's trade until a spec update) — an
     evolved-schema append to a bucketed table raises loudly at plan
-    time (``_bucketed_write``'s schema guard) and the migration path is
+    time (``append``'s schema guard) and the migration path is
     an atomic ``compact(spark, target_schema=...)`` rewrite.
 
     ``stats_col``: name of a column whose per-run min/max is recorded in
@@ -114,13 +143,15 @@ class CheckpointedTable:
     (``expire_before``). Callers that know the bounds without a scan
     (the engine stamps one commit timestamp per run) pass
     ``stats_bounds`` to ``append``; otherwise the freshly written run —
-    and only it — is scanned once for min/max."""
+    and only it — is scanned once for min/max.
 
-    def __init__(self, path: str, schema: T.StructType | None = None,
-                 bucket_key: str | None = None, n_buckets: int = 32,
-                 stats_col: str | None = None) -> None:
+    Every verb writes through ``_write_run`` (the one layout branch, the
+    run-id check, the stats) and commits with one manifest rename;
+    ``replace``/``compact``/``migrate`` are the one ``_rewrite``."""
+
+    def __init__(self, path: str, bucket_key: str | None = None,
+                 n_buckets: int = 32, stats_col: str | None = None) -> None:
         self.path = path
-        self.schema = schema
         self.bucket_key = bucket_key
         self.n_buckets = n_buckets
         self.stats_col = stats_col
@@ -352,14 +383,41 @@ class CheckpointedTable:
     def run_dir(self, run_id: str) -> str:
         return os.path.join(self.data_dir, f"run_id={run_id}")
 
+    def _write_run(self, df: DataFrame, run_id: str,
+                   stats_bounds=None) -> dict | None:
+        """The ONE run writer: writes ``df`` as run ``run_id`` in this
+        table's layout — plain parquet under ``run_dir``, or
+        ``_bucketed_write`` — and returns its manifest stat. It commits
+        nothing: publishing the run is the caller's manifest rename."""
+        check_run_id(run_id)
+        if self.bucket_key is None:
+            df.write.mode("overwrite").parquet(self.run_dir(run_id))
+        else:
+            self._bucketed_write(df, run_id)
+        return self._compute_run_stat(df.sparkSession, run_id, stats_bounds)
+
+    def _rewrite(self, df: DataFrame, run_id: str, stats_bounds=None,
+                 meta: dict | None = None) -> None:
+        """The ONE snapshot rewrite: write ``df`` as run ``run_id``, flip
+        the manifest to ``[run_id]`` in one rename, then vacuum the runs
+        it replaced (expired snapshots). A crash before the rename leaves
+        the old snapshot committed and intact."""
+        old_runs = self.committed_runs()
+        stat = self._write_run(df, run_id, stats_bounds)
+        self._write_manifest([run_id], {run_id: stat} if stat else {},
+                             meta=meta)
+        for r in old_runs:  # post-commit cleanup
+            self.abandon(r)
+
     def _ensure_registered(self, spark: SparkSession,
                            schema: T.StructType) -> None:
         """Catalog registration for the bucketed layout. The in-memory
         catalog dies with the session, so a resumed job re-creates the
         SAME external table (name derived from path) over the existing
-        data dir and recovers its run_id partitions — the files, not the
-        catalog, are the durable artifact (like an Iceberg metadata
-        re-read)."""
+        data dir — the files, not the catalog, are the durable artifact
+        (like an Iceberg metadata re-read). The entry starts with no
+        partitions: ``read`` registers the committed runs from the
+        manifest, so an uncommitted run dir never becomes one."""
         if spark.catalog.tableExists(self.table_name):
             return
         # pre-create the location: CREATE TABLE over a missing dir logs a
@@ -376,8 +434,6 @@ class CheckpointedTable:
             f"SORTED BY ({self.bucket_key}) INTO {self.n_buckets} BUCKETS "
             f"LOCATION '{self.data_dir}'"
         )
-        if os.path.exists(self.data_dir):
-            spark.sql(f"MSCK REPAIR TABLE {self.table_name}")
 
     def append(self, df: DataFrame, run_id: str, stats_bounds=None,
                also_mark: list[str] | tuple[str, ...] = (),
@@ -398,9 +454,7 @@ class CheckpointedTable:
         leaves no crash window in which the data is committed but its
         coverage is not."""
         self.check_layout()
-        if self.bucket_key is None:
-            df.write.mode("overwrite").parquet(self.run_dir(run_id))
-        else:
+        if self.bucket_key is not None:
             # A bucketed table's schema is FIXED by its catalog entry —
             # an evolved-schema append would either throw Spark's opaque
             # saveAsTable mismatch or silently corrupt the layout, so it
@@ -419,8 +473,7 @@ class CheckpointedTable:
                     "cast/null-extended and rewritten as one snapshot — "
                     "then retry the append."
                 )
-            self._bucketed_write(df, run_id)
-        stat = self._compute_run_stat(df.sparkSession, run_id, stats_bounds)
+        stat = self._write_run(df, run_id, stats_bounds)
         mark_empty = () if self._run_holds_rows(run_id) else (run_id,)
         self._commit(run_id, stat, also_mark=also_mark, meta=meta,
                      mark_empty=mark_empty)
@@ -476,9 +529,9 @@ class CheckpointedTable:
         write.distribution-mode=hash on a bucket-transform table.
 
         Schema guarding lives in the CALLERS: ``append`` rejects an
-        evolved schema outright; ``replace``/``compact`` are full
-        rewrites, so they re-create the catalog entry when the schema
-        changes instead."""
+        evolved schema outright; ``replace`` (and so ``compact``) is a
+        full rewrite, so it re-creates the catalog entry when the schema
+        changes instead, and ``migrate`` drops the entry up front."""
         from pyspark.sql import functions as F
 
         spark = df.sparkSession
@@ -510,9 +563,9 @@ class CheckpointedTable:
 
     def replace(self, df: DataFrame, run_id: str, stats_bounds=None,
                 meta: dict | None = None) -> None:
-        """Rewrite the table as a single snapshot (atomic): the manifest
-        flips to [run_id] in one rename; old run dirs become garbage
-        (expired snapshots) and are vacuumed afterwards. Reference
+        """Rewrite the table as a single snapshot (``_rewrite``, atomic):
+        the manifest flips to [run_id] in one rename; old run dirs become
+        garbage (expired snapshots) and are vacuumed afterwards. Reference
         analogue: top-N retention rewrite + VACUUM (HistoryManager.cpp:
         330-363, 391-395); Iceberg analogue: overwrite + expire_snapshots.
 
@@ -541,10 +594,7 @@ class CheckpointedTable:
                 "rewrite (content-addressed ids: same id == same "
                 "content) or mint a fresh id."
             )
-        old_runs = self.committed_runs()
-        if self.bucket_key is None:
-            df.write.mode("overwrite").parquet(self.run_dir(run_id))
-        else:
+        if self.bucket_key is not None:
             plan = df._jdf.queryExecution().analyzed().toString()
             if self.table_name in plan:
                 raise ValueError(
@@ -559,12 +609,7 @@ class CheckpointedTable:
             # it (external table: data files untouched)
             if self._catalog_schema_mismatch(df.sparkSession, df.schema) is not None:
                 df.sparkSession.sql(f"DROP TABLE IF EXISTS {self.table_name}")
-            self._bucketed_write(df, run_id)
-        stat = self._compute_run_stat(df.sparkSession, run_id, stats_bounds)
-        self._write_manifest([run_id], {run_id: stat} if stat else {},
-                             meta=meta)
-        for r in old_runs:  # expire old snapshots (post-commit cleanup)
-            self.abandon(r)
+        self._rewrite(df, run_id, stats_bounds, meta)
 
     def compact(self, spark: SparkSession,
                 target_schema: T.StructType | None = None) -> str | None:
@@ -577,42 +622,38 @@ class CheckpointedTable:
         scan tasks multiply, bucket files fragment (each append writes
         its own per-bucket files, so a bucketed read opens
         runs x buckets files per bucket). Compaction rewrites the table
-        as one snapshot: the source is read as plain parquet (bypassing
-        the catalog so the rewrite never inserts into a table it is
-        reading), bucketed tables land one file per bucket
-        (``_bucketed_write``'s hash-repartition), and the manifest
-        flip is the same atomic commit as every other write — a crash
-        mid-compaction leaves the old snapshots fully intact.
+        as one snapshot through ``replace``: the source is ``read_raw``
+        (plain parquet, bypassing the catalog so the rewrite never
+        inserts into a table it is reading), bucketed tables land one
+        file per bucket (``_bucketed_write``'s hash-repartition), and the
+        manifest flip is the same atomic commit as every other write — a
+        crash mid-compaction leaves the old snapshots fully intact.
 
         ``target_schema``: SCHEMA MIGRATION for bucketed tables (whose
         appends reject evolution): existing columns are cast to the
         target type, absent columns materialize as typed nulls, columns
-        not in the target are dropped, and the catalog entry is
-        re-created with the new schema in the same atomic rewrite.
+        not in the target are dropped, and ``replace`` re-creates the
+        catalog entry with the new schema in the same atomic rewrite.
         With a target_schema the rewrite proceeds even for a
         single-snapshot table (it is a migration, not just a merge)."""
         from pyspark.sql import functions as F
 
-        runs = self.committed_runs()
-        dirs = [d for d in (self.run_dir(r) for r in runs) if os.path.exists(d)]
         # gate on committed RUNS, not physical dirs: a zero-row run
         # commits a manifest entry with no dir, and folding it into the
         # snapshot (absorbed into ancestry) is exactly what bounds
         # manifest growth — gating on dirs once made compact a silent
         # no-op whenever a resume run contributed zero rows
-        if not dirs or (len(runs) <= 1 and target_schema is None):
+        if len(self.committed_runs()) <= 1 and target_schema is None:
             return None
-        src = spark.read.option("mergeSchema", "true").parquet(*dirs)
+        src = self.read_raw(spark)
+        if src is None:
+            return None
         if target_schema is not None:
             src = src.select(*[
                 (F.col(f.name) if f.name in src.columns
                  else F.lit(None)).cast(f.dataType).alias(f.name)
                 for f in target_schema.fields if f.name != "run_id"
             ])
-            if self.bucket_key is not None:
-                # the catalog entry pins the OLD schema; the migration
-                # re-creates it (external table: files untouched)
-                spark.sql(f"DROP TABLE IF EXISTS {self.table_name}")
         run_id = f"compact-{uuid.uuid4().hex[:8]}"
         self.replace(src, run_id)
         return run_id
@@ -696,11 +737,7 @@ class CheckpointedTable:
                     "timestamp, date, ISO string)"
                 )
             boundary = f"expire-{uuid.uuid4().hex[:8]}"
-            if self.bucket_key is None:
-                src.write.mode("overwrite").parquet(self.run_dir(boundary))
-            else:
-                self._bucketed_write(src, boundary)
-            stat = self._compute_run_stat(spark, boundary)
+            stat = self._write_run(src, boundary)
             if stat is not None:
                 new_stats[boundary] = stat
             new_runs.append(boundary)
@@ -716,27 +753,18 @@ class CheckpointedTable:
         CONSTRUCTOR'S layout (the one ``check_layout`` just refused to
         open). Plain->bucketed backfills an upgraded deployment's
         pre-bucketing results dir; bucketed->plain (or re-bucketing)
-        works the same way. The data is re-sourced as plain parquet
+        works the same way. The data is re-sourced through ``read_raw``
         (parquet files are parquet regardless of bucket layout), any
-        stale catalog entry is re-created, and the manifest flip is the
-        usual single atomic commit."""
-        runs = self.committed_runs()
-        dirs = [d for d in (self.run_dir(r) for r in runs) if os.path.exists(d)]
-        if not dirs:
-            self._write_manifest(runs, self.run_stats())  # stamp layout only
+        stale catalog entry is dropped, and the rewrite is the usual
+        ``_rewrite``. Unlike ``replace`` it skips ``check_layout``:
+        opening a mismatched layout is its purpose."""
+        src = self.read_raw(spark)
+        if src is None:  # stamp the layout only
+            self._write_manifest(self.committed_runs(), self.run_stats())
             return None
-        src = spark.read.option("mergeSchema", "true").parquet(*dirs)
         spark.sql(f"DROP TABLE IF EXISTS {self.table_name}")
         run_id = f"migrate-{uuid.uuid4().hex[:8]}"
-        if self.bucket_key is None:
-            src.write.mode("overwrite").parquet(self.run_dir(run_id))
-        else:
-            self._bucketed_write(src, run_id)
-        stat = self._compute_run_stat(spark, run_id)
-        self._write_manifest([run_id], {run_id: stat} if stat else {})
-        for r in runs:
-            if r != run_id:
-                self.abandon(r)
+        self._rewrite(src, run_id)
         return run_id
 
     def read_raw(self, spark: SparkSession) -> DataFrame | None:
@@ -744,7 +772,7 @@ class CheckpointedTable:
         bypassing the catalog — no bucketed-scan guarantee, but safe as
         the SOURCE of a plan that ``replace()``s this same table (the
         bucketed write must never insert into a table its own plan is
-        scanning; same trick ``compact`` uses)."""
+        scanning) — the source ``compact`` and ``migrate`` rewrite."""
         dirs = [d for d in (self.run_dir(r) for r in self.committed_runs())
                 if os.path.exists(d)]
         if not dirs:
@@ -768,8 +796,8 @@ class CheckpointedTable:
         content_hash (HistoryManager.cpp:70-77).
 
         Bucketed: a catalog-table scan filtered to committed run_id
-        partitions (partition-pruned; uncommitted/crashed runs are
-        invisible exactly as before) — the scan reports
+        partitions (partition-pruned; uncommitted/crashed runs are never
+        registered and never read) — the scan reports
         HashPartitioning(bucket_key, n_buckets), so downstream joins and
         aggregations on the key add no Exchange on this side."""
         from pyspark.sql import functions as F
@@ -783,14 +811,15 @@ class CheckpointedTable:
             return spark.read.option("mergeSchema", "true").parquet(
                 *map(self.run_dir, live))
         if not spark.catalog.tableExists(self.table_name):
-            # fresh session over durable files: re-register, then recover
-            # the run_id partitions from the filesystem
+            # fresh session over durable files: re-create the entry
             self._ensure_registered(
                 spark, spark.read.parquet(self.run_dir(live[0])).schema)
-        # runs another process committed after this session registered the
-        # table have no catalog partition yet, and the run_id filter below
-        # would silently drop their rows: register them (SHOW PARTITIONS
-        # is a catalog lookup on the driver, no Spark job)
+        # THE partition registration: every committed run the catalog
+        # entry lacks (all of them after a re-creation; runs another
+        # process committed since this session registered the table)
+        # is added from the manifest — the run_id filter below would
+        # silently drop their rows. SHOW PARTITIONS is a catalog lookup
+        # on the driver, no Spark job.
         known = {unquote(row[0].split("=", 1)[1]) for row in
                  spark.sql(f"SHOW PARTITIONS {self.table_name}").collect()}
         missing = [r for r in live if r not in known]
@@ -802,11 +831,3 @@ class CheckpointedTable:
             .filter(F.col("run_id").isin(runs))
             .drop("run_id")
         )
-
-    def read_or_empty(self, spark: SparkSession) -> DataFrame:
-        df = self.read(spark)
-        if df is not None:
-            return df
-        if self.schema is None:
-            raise ValueError(f"empty table {self.path} and no schema declared")
-        return spark.createDataFrame([], self.schema)
