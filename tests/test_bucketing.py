@@ -2,8 +2,8 @@
 bucketed (big) side — only the probe side exchanges."""
 
 import pyspark.sql.functions as F
+from oracles import n_shuffle_exchanges
 
-from xs_vlm_ocr_spark.operators.bucketing import n_shuffle_exchanges
 from xs_vlm_ocr_spark.table_io import CheckpointedTable
 
 

@@ -1,4 +1,4 @@
-"""Cleanup chains, JSON fallback parse, SQL-registered UDFs, retention."""
+"""Cleanup chains, JSON fallback parse, retention."""
 
 import pyspark.sql.functions as F
 
@@ -6,7 +6,6 @@ from xs_vlm_ocr_spark.functions import (
     default_prompt_fallback,
     glm_cleanup_chain,
     parse_response_with_fallbacks,
-    register_all,
 )
 
 
@@ -41,29 +40,6 @@ def test_parse_response_with_fallbacks(spark):
     got = [r["c"] for r in
            df.select(parse_response_with_fallbacks(F.col("resp")).alias("c")).collect()]
     assert got == ["A", "B", "C", "ERROR: boom"]
-
-
-def test_sql_registered_udfs(spark):
-    register_all(spark)
-    spark.createDataFrame(
-        [("d1", "<p>kept paragraph with plenty of characters</p><nav><a href='#'>x</a></nav>")],
-        "doc_id string, html string",
-    ).createOrReplaceTempView("pages")
-    row = spark.sql("SELECT xs_strip_html(html) AS segs FROM pages").first()
-    assert row["segs"] == ["kept paragraph with plenty of characters"]
-
-    spark.createDataFrame(
-        [("d1", [{"kind": "text", "text": " a  b ", "media_ref": "", "offset": 0},
-                 {"kind": "media", "text": "", "media_ref": "m1", "offset": 5}])],
-        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
-    ).createOrReplaceTempView("docs_v")
-    row = spark.sql(
-        "SELECT xs_extract(spans) AS out, xs_merge_text(xs_extract(spans)) AS txt FROM docs_v"
-    ).first()
-    assert [(s["kind"], s["text"], s["media_ref"], s["order"]) for s in row["out"]] == [
-        ("text", "a b", "", 0), ("media", "", "m1", 1)
-    ]
-    assert row["txt"] == "a b"
 
 
 def test_retention_compacts_table(spark, tmp_path):

@@ -6,7 +6,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from xs_vlm_ocr_spark.operators.dedup import cache_hits, exact_dedup
-from xs_vlm_ocr_spark.operators.extraction import invalid_docs, valid_docs
+from xs_vlm_ocr_spark.operators.extraction import is_valid_doc, valid_docs
 from xs_vlm_ocr_spark.operators.history import page_after, paginate
 
 
@@ -63,8 +63,9 @@ def test_invalid_docs_routed_not_dropped(spark):
     ]
     df = spark.createDataFrame(rows, DOCS_SCHEMA)
     assert [r["doc_id"] for r in valid_docs(df).collect()] == ["ok"]
-    assert [r["doc_id"] for r in invalid_docs(df).collect()] == ["empty"]
-    assert valid_docs(df).count() + invalid_docs(df).count() == df.count()
+    invalid = df.filter(~is_valid_doc())
+    assert [r["doc_id"] for r in invalid.collect()] == ["empty"]
+    assert valid_docs(df).count() + invalid.count() == df.count()
 
 
 def test_exact_dedup_keeps_lowest_doc_id(spark):

@@ -294,34 +294,6 @@ def test_sync_clusters_incremental_path(spark, tmp_path_factory):
     assert assignment() == full_cc()
 
 
-def test_sync_clusters_legacy_row_stamp_migrates_to_meta(spark, tmp_path_factory):
-    """A pre-meta snapshot (per-row src_runs stamp column) is read via
-    the legacy fallback; the next sync drops the stamp column and moves
-    the bookkeeping into the manifest meta."""
-    out = str(tmp_path_factory.mktemp("job_nd_legacy"))
-    job = ExtractionJob(out, near_dup_threshold=0.5)
-    job.run(spark, _docs(spark, [("a", NEAR_A), ("b", NEAR_B)]))
-    assert job.sync_clusters(spark) is not None
-    runs_now = job.neardup_clusters_tbl.get_meta()["src_runs"]
-
-    # rewrite the snapshot in the LEGACY shape: row stamp, no meta
-    tbl = job.neardup_clusters_tbl
-    legacy = tbl.read(spark).withColumn(
-        "src_runs", F.lit(",".join(runs_now))
-    )
-    tbl.replace(legacy, "clusters-legacy", meta={})
-    assert "src_runs" not in tbl.get_meta()
-
-    # in step: the legacy row stamp is honoured (no spurious rebuild)
-    assert job.sync_clusters(spark) is None
-
-    # a new increment migrates the bookkeeping into the manifest
-    job.run(spark, _docs(spark, [("d", NEAR_D)]))
-    assert job.sync_clusters(spark) is not None
-    assert set(tbl.get_meta()["src_runs"]) >= set(runs_now)
-    assert "src_runs" not in tbl.read(spark).columns
-
-
 def test_sync_clusters_zero_row_snapshot_keeps_meta(spark, tmp_path_factory):
     """A corpus with NO near-dup pairs commits a zero-row assignment
     snapshot; the manifest meta still records the reflected pairs runs,

@@ -1,5 +1,5 @@
 """Multimodal plumbing: schema, batch shape, error isolation, and the
-size-adaptive codec / resize / frame-sample column logic."""
+size-adaptive codec / resize column logic."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -9,7 +9,6 @@ from xs_vlm_ocr_spark.operators.multimodal import (
     choose_codec,
     decode_image,
     decode_media_batch,
-    frame_sample_plan,
     plan_resize,
 )
 
@@ -51,18 +50,15 @@ def test_decode_matches_local_oracle(spark, media_df):
 
 def test_codec_resize_frame_columns(spark):
     df = spark.createDataFrame(
-        [(1, 4000, 2000, 100), (2, 640, 480, 5), (3, 1920, 1080, 0)],
-        "id int, w int, h int, frames int",
+        [(1, 4000, 2000), (2, 640, 480), (3, 1920, 1080)],
+        "id int, w int, h int",
     )
     out = df.select(
         "id",
         choose_codec(F.col("w"), F.col("h")).alias("codec"),
         plan_resize(F.col("w")).alias("scale"),
-        frame_sample_plan(F.col("frames")).alias("picks"),
     ).collect()
     by_id = {r["id"]: r for r in out}
     assert by_id[1]["codec"] == "jpeg85" and by_id[2]["codec"] == "png"
     assert by_id[3]["codec"] == "png"  # boundary: exactly 1920x1080 stays png
     assert by_id[1]["scale"] == 1 and by_id[2]["scale"] == 2
-    assert by_id[1]["picks"] == [0, 10, 20, 30, 40, 50, 60, 70, 80, 90]
-    assert by_id[3]["picks"] == []

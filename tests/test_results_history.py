@@ -133,7 +133,7 @@ def test_replay_plan_scans_input_once(spark, tmp_path_factory):
     the input source, same as a plain run."""
     import re
 
-    from xs_vlm_ocr_spark.corpus import gen_docs_local
+    from oracles import gen_docs_local
     from xs_vlm_ocr_spark.schemas import DOCS_SCHEMA
 
     base = tmp_path_factory.mktemp("replay_one_scan")

@@ -63,28 +63,3 @@ def test_ivf_deterministic(spark, emb):
     b = sorted(map(tuple, ivf_topk(emb.repartition(7), q, dim=DIM, nprobe=2).collect()))
     assert a == b
 
-
-def test_ivf_pruned_matches_unpruned_and_prunes_scan(spark, emb, tmp_path):
-    """write_ivf_partitioned + ivf_topk_pruned: identical results to the
-    in-memory ivf_topk (same centroids/seed) AND the scan carries a
-    partition filter on ivf_cell (unprobed cell dirs never read)."""
-    import glob
-
-    from xs_vlm_ocr_spark.operators.similarity import (
-        ivf_topk_pruned,
-        write_ivf_partitioned,
-    )
-
-    path = str(tmp_path / "ivf_corpus")
-    write_ivf_partitioned(emb, path, dim=DIM, n_cells=8)
-    assert len(glob.glob(path + "/ivf_cell=*")) > 1  # really partitioned
-
-    q = emb.filter(F.col("vec_id") < 5)
-    pruned = ivf_topk_pruned(spark, path, q, dim=DIM, k=10, n_cells=8, nprobe=3)
-    want = sorted(map(tuple, ivf_topk(emb, q, dim=DIM, k=10, n_cells=8,
-                                      nprobe=3).collect()))
-    got = sorted(map(tuple, pruned.collect()))
-    assert got == want and len(got) > 0
-
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "ivf_cell" in plan, plan

@@ -1,7 +1,5 @@
-"""Strategy config: provider inheritance join, enabled filter, fallback
-selection, canonical param hashing, and engine dispatch."""
+"""Strategy config: provider inheritance join and engine dispatch."""
 
-import pyspark.sql.functions as F
 import pytest
 
 from xs_vlm_ocr_spark import strategies as S
@@ -42,23 +40,6 @@ def test_provider_fills_missing(inherited):
     # empty provider value stays empty (nothing to inherit)
     assert inherited["m3"]["params"]["api_key"] == ""
     assert inherited["m4"]["params"]["api_host"] == "https://p2"
-
-
-def test_enabled_filter_and_fallback(spark):
-    models = S.strategies_df(spark, CONFIG)
-    assert {r["id"] for r in S.enabled_strategies(models).collect()} == {"m1", "m3", "m4"}
-    assert S.select_strategy(models, "m1") == "m1"
-    assert S.select_strategy(models, "m2") == "m1"   # disabled -> first enabled registered
-    assert S.select_strategy(models, "m3") == "m1"   # unregistered engine -> fallback
-
-
-def test_canonical_param_string_excludes_secrets(spark):
-    df = spark.createDataFrame(
-        [({"b": "2", "api_key": "SECRET", "a": "1", "access_token": "T"},)],
-        "params map<string,string>",
-    )
-    got = df.select(S.canonical_param_string(F.col("params")).alias("c")).first()["c"]
-    assert got == "a=1;b=2"
 
 
 def test_engine_dispatch_changes_extraction(spark):

@@ -63,37 +63,6 @@ def test_windowed_metrics_matches_batch(spark, tmp_path):
     assert got == exp
 
 
-def test_dedup_stream_bounded_state(spark, tmp_path):
-    """dropDuplicatesWithinWatermark: dupes inside the watermark horizon
-    are dropped once; state stays bounded by the watermark (the
-    forever-running-stream shape of the D1 content-hash dedup)."""
-    import pyspark.sql.functions as F
-
-    from xs_vlm_ocr_spark.streaming.incremental import dedup_stream
-
-    rows = [
-        ("h1", "2024-01-01 10:00:00"),
-        ("h1", "2024-01-01 10:05:00"),   # dupe within watermark -> dropped
-        ("h2", "2024-01-01 10:10:00"),
-        ("h2", "2024-01-01 10:10:00"),   # exact dupe -> dropped
-        ("h3", "2024-01-01 11:00:00"),
-    ]
-    df = spark.createDataFrame(rows, "content_hash string, ts_s string").select(
-        "content_hash", F.col("ts_s").cast("timestamp").alias("ts")
-    )
-    src = str(tmp_path / "dd_src")
-    df.coalesce(1).write.parquet(src)
-
-    stream = spark.readStream.schema("content_hash string, ts timestamp").parquet(src)
-    out = dedup_stream(stream, ["content_hash"], "ts", "2 hours")
-    q = (out.writeStream.outputMode("append").format("memory")
-         .queryName("dd_out").start())
-    q.processAllAvailable()
-    q.stop()
-    got = sorted(r["content_hash"] for r in spark.sql("select * from dd_out").collect())
-    assert got == ["h1", "h2", "h3"]
-
-
 def test_stream_ingest_converges_with_batch(spark, tmp_path):
     """Round-7 stretch: the SAME docs ingested (a) as one batch run and
     (b) as two streaming micro-batches converge on IDENTICAL committed

@@ -67,7 +67,7 @@ def test_compact_merges_snapshots_and_shrinks_files(spark, tmp_path_factory):
 
     from pyspark.sql import functions as F
 
-    from xs_vlm_ocr_spark.operators.bucketing import n_shuffle_exchanges
+    from oracles import n_shuffle_exchanges
     from xs_vlm_ocr_spark.table_io import CheckpointedTable
 
     path = str(tmp_path_factory.mktemp("tbl_compact") / "t")
@@ -123,7 +123,7 @@ def test_bucketed_append_writes_one_file_per_bucket(spark, tmp_path_factory,
     import glob
     import os
 
-    from xs_vlm_ocr_spark.operators.bucketing import n_shuffle_exchanges
+    from oracles import n_shuffle_exchanges
 
     sc = spark.sparkContext
     k = {4: 4, 32: 8}[n_buckets]
@@ -277,62 +277,34 @@ def test_layout_mismatch_raises_and_migrate_rewrites(spark, tmp_path_factory):
         CheckpointedTable(path).read(spark)
 
 
-def test_legacy_manifest_layout_inferred_from_files(spark, tmp_path_factory):
-    """Manifests written before the layout record existed: inference
-    via Spark's bucketed file-name stamp still catches the mismatch."""
+def test_manifest_without_layout_refused_before_any_scan(spark, tmp_path_factory,
+                                                        monkeypatch):
+    """A manifest with committed runs but no layout record is not a
+    format the engine writes: ``read`` refuses it with a RuntimeError
+    naming the table, before Spark scans anything, under either
+    constructor layout."""
     import json
+    import re
 
-    path = str(tmp_path_factory.mktemp("tbl_legacy") / "t")
-    plain = CheckpointedTable(path)
-    plain.append(_ts_rows(spark, 1), "r0")
-    # strip the layout record to simulate a pre-upgrade manifest
-    with open(plain.manifest_path) as f:
+    from pyspark.sql import SparkSession
+
+    path = str(tmp_path_factory.mktemp("tbl_nolayout") / "t")
+    CheckpointedTable(path).append(_ts_rows(spark, 1), "r0")
+    manifest = CheckpointedTable(path).manifest_path
+    with open(manifest) as f:
         m = json.load(f)
-    m.pop("layout"), m.pop("stats", None)
-    with open(plain.manifest_path, "w") as f:
+    m.pop("layout")
+    with open(manifest, "w") as f:
         json.dump(m, f)
 
-    assert CheckpointedTable(path).read(spark).count() == 10  # plain: fine
-    with pytest.raises(RuntimeError, match="layout"):
-        CheckpointedTable(path, bucket_key="content_hash").read(spark)
+    def no_scan(self):
+        raise AssertionError("spark.read reached before the layout check")
 
-
-def test_legacy_layout_inference_lists_bounded_dirs(spark, tmp_path_factory,
-                                                    monkeypatch):
-    """Every read of a legacy manifest infers the layout from the file
-    names. The inference must stop at the first data file: directory
-    listings per read stay flat as the committed run count grows."""
-    import json
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    def listings_per_read(n_runs: int) -> int:
-        path = str(tmp_path_factory.mktemp(f"tbl_legacy_{n_runs}") / "t")
-        runs = [f"r{i:03d}" for i in range(n_runs)]
-        for r in runs:
-            os.makedirs(os.path.join(path, "data", f"run_id={r}"))
-            pq.write_table(pa.table({"x": [1]}),
-                           os.path.join(path, "data", f"run_id={r}", "part-0.parquet"))
-        with open(os.path.join(path, "manifest.json"), "w") as f:
-            json.dump({"runs": runs}, f)  # no layout record
-        seen = []
-        for name in ("scandir", "listdir"):
-            real = getattr(os, name)
-
-            def counting(p=".", _real=real):
-                if str(p).startswith(path):
-                    seen.append(p)
-                return _real(p)
-
-            monkeypatch.setattr(os, name, counting)
-        df = CheckpointedTable(path).read(spark)
-        monkeypatch.undo()
-        assert df.count() == n_runs
-        return len(seen)
-
-    assert listings_per_read(40) == listings_per_read(2)
+    monkeypatch.setattr(SparkSession, "read", property(no_scan))
+    for tbl in (CheckpointedTable(path),
+                CheckpointedTable(path, bucket_key="content_hash", n_buckets=4)):
+        with pytest.raises(RuntimeError, match=re.escape(path)):
+            tbl.read(spark)
 
 
 # ------------------------------------------- bucketed schema evolution
@@ -365,7 +337,7 @@ def test_bucketed_schema_evolution_raises_and_compact_migrates(spark, tmp_path_f
     tbl.append(evolved, "r1")  # evolved append now valid
     assert tbl.read(spark).filter(F.col("lang") == "en").count() == 10
     # the bucketed-join guarantee survived the migration
-    from xs_vlm_ocr_spark.operators.bucketing import n_shuffle_exchanges
+    from oracles import n_shuffle_exchanges
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         probe = spark.range(5).select(

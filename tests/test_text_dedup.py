@@ -100,10 +100,8 @@ def test_grid_near_dup_complete_vs_exact(spark):
     threshold (triangle-inequality completeness), so grid == all-pairs."""
     import numpy as np
 
-    from xs_vlm_ocr_spark.operators.text_dedup import (
-        embedding_near_dup_pairs,
-        embedding_near_dup_pairs_exact,
-    )
+    from oracles import embedding_near_dup_pairs_exact
+    from xs_vlm_ocr_spark.operators.text_dedup import embedding_near_dup_pairs
 
     rng = np.random.RandomState(11)
     base = rng.standard_normal((60, 16)).astype(np.float32)
@@ -130,10 +128,10 @@ def test_grid_prunes_clustered_data_at_tight_threshold(spark):
     case is routed to the approximate family, per the docstring."""
     import numpy as np
 
+    from oracles import embedding_near_dup_pairs_exact
     from xs_vlm_ocr_spark.operators.text_dedup import (
         _grid_feat_and_candidates,
         embedding_near_dup_pairs,
-        embedding_near_dup_pairs_exact,
     )
 
     rng = np.random.RandomState(23)

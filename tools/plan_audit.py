@@ -270,8 +270,10 @@ CHECKS: dict[str, list[tuple[str, object]]] = {
     ],
     # streaming_hourly_rollup: the contract query returns the sink's
     # materialized rows (LocalTableScan) — the windowed aggregation runs
-    # inside the streaming engine, out of reach of this df's plan; its
-    # state-boundedness is pinned by tests/test_stateful_streaming.py
+    # inside the streaming engine, out of reach of this df's plan. Its
+    # values are checked by the DuckDB oracle and by
+    # tests/test_streaming.py::test_windowed_metrics_matches_batch; no
+    # test pins that its watermark keeps the state bounded
     "token_count": [
         ("all-JVM scalar pipeline (codegen, no python UDF)",
          lambda p: _codegen(p) and "PythonUDF" not in p),

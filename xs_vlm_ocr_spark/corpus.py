@@ -173,10 +173,6 @@ def is_hot(i: int, skewed: bool) -> bool:
     return skewed and i % 100 == 0
 
 
-def gen_docs_local(n_docs: int, seed: int = DEFAULT_SEED, skewed: bool = False) -> list[dict]:
-    return [gen_doc(doc_id_for(i), seed, hot=is_hot(i, skewed)) for i in range(n_docs)]
-
-
 def gen_docs_df(spark, n_docs: int, seed: int = DEFAULT_SEED, skewed: bool = False,
                 partitions: int | None = None):
     """Distributed deterministic corpus: one row per doc, generated on
@@ -196,11 +192,6 @@ def gen_docs_df(spark, n_docs: int, seed: int = DEFAULT_SEED, skewed: bool = Fal
     )
 
 
-def write_corpus(spark, out_dir: str, n_docs: int, seed: int = DEFAULT_SEED,
-                 skewed: bool = False, partitions: int | None = None) -> None:
-    gen_docs_df(spark, n_docs, seed, skewed, partitions).write.mode("overwrite").parquet(out_dir)
-
-
 # ------------------------------------------- driver-shaped interleave
 
 def gen_interleave_doc(doc_id: str, seed: int = DEFAULT_SEED) -> dict:
@@ -209,8 +200,8 @@ def gen_interleave_doc(doc_id: str, seed: int = DEFAULT_SEED) -> dict:
     html span wrapping the body in nav/footer boilerplate, a media span,
     and a plain-text span repeating the body. This is the workload where
     the Arrow-bypass transport cut is largest (the plain-text copy of the
-    body never crosses the Python boundary), used by the scaling bench's
-    interleave pair."""
+    body never crosses the Python boundary), used by perfbench's
+    interleaved inputs (perfbench/inputs.py)."""
     rng = _rng(seed, doc_id)
     body = _paragraph(rng, rng.randint(8, 24))
     html = (
@@ -231,20 +222,3 @@ def gen_interleave_doc(doc_id: str, seed: int = DEFAULT_SEED) -> dict:
         ],
     }
 
-
-def gen_interleave_docs_df(spark, n_docs: int, seed: int = DEFAULT_SEED,
-                           partitions: int | None = None):
-    num_parts = partitions or spark.sparkContext.defaultParallelism
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            docs = [gen_interleave_doc(doc_id_for(int(i)), seed) for i in pdf["id"]]
-            yield pd.DataFrame(
-                {"doc_id": [d["doc_id"] for d in docs],
-                 "spans": [d["spans"] for d in docs]}
-            )
-
-    return (
-        spark.range(0, n_docs, numPartitions=num_parts)
-        .mapInPandas(gen, schema=DOCS_SCHEMA)
-    )

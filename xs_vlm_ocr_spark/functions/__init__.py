@@ -1,10 +1,8 @@
-"""Named engine functions: column factories + SQL-registered UDFs.
+"""Named engine functions: column factories for model-output cleanup.
 
-``register_all(spark)`` exposes the extraction stages to Spark SQL by
-name — the engine's equivalent of the reference's named-adapter
-registration (reference docs recipe + engine dispatch,
-src/ui/MainWindow.cpp:846-882): after registration,
-``SELECT xs_extract(spans) FROM docs`` works from plain SQL.
+Each factory returns a Catalyst column expression (no Python UDF), so
+the chains run JVM-side and a DuckDB oracle can value-check them (the
+driver contract's ``glm_cleanup`` query does).
 """
 
 from xs_vlm_ocr_spark.functions.cleanup import (
@@ -17,37 +15,4 @@ __all__ = [
     "glm_cleanup_chain",
     "default_prompt_fallback",
     "parse_response_with_fallbacks",
-    "register_all",
 ]
-
-
-def register_all(spark) -> None:
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from xs_vlm_ocr_spark.extract.html_strip import strip_html
-    from xs_vlm_ocr_spark.extract.pipeline import extract_doc, merge_full_text
-    from xs_vlm_ocr_spark.extract.xycut import xycut_paragraphs
-
-    @F.pandas_udf("array<string>")
-    def xs_strip_html(html: pd.Series) -> pd.Series:
-        return html.map(lambda h: strip_html(h or ""))
-
-    @F.pandas_udf("array<string>")
-    def xs_xycut(lines: pd.Series) -> pd.Series:
-        return lines.map(lambda ls: xycut_paragraphs([] if ls is None else list(ls)))
-
-    @F.pandas_udf(
-        "array<struct<kind:string,text:string,media_ref:string,order:int>>"
-    )
-    def xs_extract(spans: pd.Series) -> pd.Series:
-        return spans.map(lambda s: extract_doc([] if s is None else list(s)))
-
-    @F.pandas_udf("string")
-    def xs_merge_text(spans_out: pd.Series) -> pd.Series:
-        return spans_out.map(lambda s: merge_full_text([] if s is None else list(s)))
-
-    spark.udf.register("xs_strip_html", xs_strip_html)
-    spark.udf.register("xs_xycut", xs_xycut)
-    spark.udf.register("xs_extract", xs_extract)
-    spark.udf.register("xs_merge_text", xs_merge_text)

@@ -71,19 +71,16 @@ def norm_col(text: Column) -> Column:
     return F.trim(F.regexp_replace(text, WS_RE, " "))
 
 
-def valid_docs(docs: DataFrame) -> DataFrame:
+def is_valid_doc() -> Column:
     """Validity predicate P3 (reference src/ui/MainWindow.cpp:1364-1368):
-    non-null doc with at least one span. Invalid rows are routed to an
-    error output by the caller, never dropped silently."""
-    return docs.filter(
-        F.col("doc_id").isNotNull() & F.col("spans").isNotNull() & (F.size("spans") > 0)
-    )
+    non-null doc with at least one span. Never null (a null ``spans``
+    makes the conjunction false), so ``~is_valid_doc()`` is exactly the
+    invalid rows, which the job counts rather than dropping silently."""
+    return F.col("doc_id").isNotNull() & F.col("spans").isNotNull() & (F.size("spans") > 0)
 
 
-def invalid_docs(docs: DataFrame) -> DataFrame:
-    return docs.filter(
-        F.col("doc_id").isNull() | F.col("spans").isNull() | (F.size("spans") <= 0)
-    )
+def valid_docs(docs: DataFrame) -> DataFrame:
+    return docs.filter(is_valid_doc())
 
 
 def with_content_hash(docs: DataFrame, model_name: str = DEFAULT_MODEL) -> DataFrame:

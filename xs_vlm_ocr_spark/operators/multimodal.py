@@ -120,11 +120,3 @@ def plan_resize(width, min_width: int = 800):
         F.lit(1)
     )
 
-
-def frame_sample_plan(n_frames, every_k: int = 10, max_frames: int = 16):
-    """Deterministic frame-sampling indices for video rows: 0, k, 2k...
-    capped — as an int array column (JVM-side sequence)."""
-    n_take = F.least(F.ceil(n_frames / every_k).cast("int"), F.lit(max_frames))
-    return F.when(n_frames > 0, F.transform(
-        F.sequence(F.lit(0), n_take - 1), lambda i: i * every_k
-    )).otherwise(F.array().cast("array<int>"))

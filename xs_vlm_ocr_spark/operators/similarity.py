@@ -170,67 +170,6 @@ def ivf_topk(
     )
 
 
-def write_ivf_partitioned(df: DataFrame, path: str, dim: int, n_cells: int = 16,
-                          seed: int = 42, id_col: str = "vec_id",
-                          vec_col: str = "embedding") -> None:
-    """Write the candidate corpus hive-partitioned by IVF cell
-    (``ivf_cell=<i>/``). Probes then prune at the FILE LISTING — data in
-    unprobed cells is never read. This is the write-time half of the
-    'candidates can be written bucketed by ivf_cell' scale path noted on
-    ivf_topk (Iceberg partition-transform analogue for ANN)."""
-    with_ivf_cell(
-        df.select(F.col(id_col), F.col(vec_col)), dim, n_cells, seed, vec_col
-    ).write.partitionBy("ivf_cell").mode("overwrite").parquet(path)
-
-
-def ivf_topk_pruned(
-    spark,
-    path: str,
-    queries: DataFrame,
-    dim: int,
-    k: int = 10,
-    n_cells: int = 16,
-    nprobe: int = 4,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF top-k over a `write_ivf_partitioned` corpus with STATIC
-    partition pruning: the distinct probe cells of the (bounded) query
-    batch are collected driver-side — O(n_cells) values, like a config
-    dim — and pushed as an `ivf_cell IN (...)` partition filter, visible
-    as PartitionFilters in the scan node. Same (centroids, seed) as
-    ivf_topk, so results are identical to the unpruned operator."""
-    centroids = _centroids(dim, n_cells, seed)
-    sims_sorted = F.reverse(F.array_sort(F.array(*_cell_sims(F.col("_q"), centroids))))
-    probe_cells = F.transform(F.slice(sims_sorted, 1, nprobe), lambda s: s["i"])
-    qb = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_q"))
-        .withColumn("ivf_cell", F.explode(probe_cells))
-    )
-    cells = [r["ivf_cell"] for r in qb.select("ivf_cell").distinct().collect()]
-    cb = (
-        spark.read.parquet(path)
-        .filter(F.col("ivf_cell").isin(cells))  # partition-pruned scan
-        .select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_e"),
-                "ivf_cell")
-    )
-    pairs = (
-        cb.join(F.broadcast(qb), "ivf_cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "_sim",
-            _dot(F.col("_q"), F.col("_e")) / (_norm(F.col("_q")) * _norm(F.col("_e"))),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("_sim"), F.asc("neighbor_id"))
-    return (
-        pairs.withColumn("knn_rank", F.row_number().over(w))
-        .filter(F.col("knn_rank") <= k)
-        .select("query_id", "neighbor_id", "knn_rank")
-    )
-
-
 def lsh_cosine_topk(
     candidates: DataFrame,
     queries: DataFrame,

@@ -638,26 +638,6 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text",
 
 # ------------------------------------------------------- embedding near-dup
 
-def embedding_near_dup_pairs_exact(df: DataFrame, vec_col: str = "embedding",
-                                   id_col: str = "vec_id",
-                                   threshold: float = 0.95) -> DataFrame:
-    """All-pairs exact cosine near-dup (O(N^2) — test oracle / tiny inputs
-    only; `embedding_near_dup_pairs` is the scale path)."""
-    from xs_vlm_ocr_spark.operators.similarity import _dot, _norm
-
-    a = df.select(F.col(id_col).alias("a"), F.col(vec_col).alias("_va"),
-                  _norm(F.col(vec_col)).alias("_na"))
-    b = df.select(F.col(id_col).alias("b"), F.col(vec_col).alias("_vb"),
-                  _norm(F.col(vec_col)).alias("_nb"))
-    return (
-        a.crossJoin(b)
-        .filter(F.col("a") < F.col("b"))
-        .withColumn("cosine", _dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")))
-        .filter(F.col("cosine") >= threshold)
-        .select("a", "b")
-    )
-
-
 def _grid_feat_and_candidates(df: DataFrame, vec_col: str, id_col: str,
                               threshold: float, n_axes: int,
                               dim: int | None, seed: int

@@ -5,9 +5,7 @@ with ``providers``, ``models`` (strategies), ``prompt_templates`` and
 ``settings`` sections (reference models_config.json, parsed at
 src/utils/ConfigManager.cpp:46-110). Driver-side parse + broadcast-sized
 dimension tables; the provider->model param inheritance is a broadcast
-left join with coalesce (reference ConfigManager.cpp:193-207, J1), and
-strategy fallback picks the first enabled strategy when the active one
-is unavailable (reference MainWindow.cpp:960-975, C7).
+left join with coalesce (reference ConfigManager.cpp:193-207, J1).
 
 The extractor dispatch table (reference engine-string dispatch,
 MainWindow.cpp:846-882) is the Python REGISTRY below: engine name ->
@@ -165,45 +163,3 @@ def templates_by_type(templates: DataFrame,
         .select("type", "type_rank", "slot", "name", "category", "label", "content")
     )
 
-
-def find_template(templates: DataFrame, type_: str,
-                  category: str | None = None) -> DataFrame:
-    """Point lookup by main type (and optional sub-category), first by
-    insertion order — the template the UI would apply on click."""
-    out = templates.filter(F.col("type") == type_)
-    if category is not None:
-        out = out.filter(F.col("category") == category)
-    return out.orderBy("pos").limit(1)
-
-
-def enabled_strategies(models: DataFrame) -> DataFrame:
-    """P2 (reference MainWindow.cpp:837-841)."""
-    return models.filter(F.col("enabled"))
-
-
-def select_strategy(models: DataFrame, active_id: str) -> str:
-    """C7 fallback: the active strategy if enabled and registered, else
-    the first enabled registered one (deterministic: ordered by id)."""
-    enabled = [
-        r["id"] for r in enabled_strategies(models).orderBy("id").collect()
-        if r["engine"] in REGISTRY
-    ]
-    if active_id in enabled:
-        return active_id
-    if enabled:
-        return enabled[0]
-    raise ValueError("no enabled strategy with a registered engine")
-
-
-def canonical_param_string(params_col):
-    """Sorted, secret-free canonicalization of a params map for content
-    hashing (reference HistoryManager.cpp:433-464 excludes api_key/
-    secret_key/access_token and sorts keys)."""
-    entries = F.filter(
-        F.map_entries(params_col),
-        lambda e: ~e["key"].isin("api_key", "secret_key", "access_token"),
-    )
-    sorted_entries = F.array_sort(
-        F.transform(entries, lambda e: F.concat_ws("=", e["key"], e["value"]))
-    )
-    return F.array_join(sorted_entries, ";")

@@ -78,21 +78,3 @@ def windowed_doc_metrics(
         )
     )
 
-
-def dedup_stream(stream: DataFrame, key_cols: list[str],
-                 ts_col: str = "ts", watermark: str = "2 hours") -> DataFrame:
-    """Streaming exact dedup with BOUNDED state: duplicates arriving
-    within the watermark horizon are dropped; dedup state for keys older
-    than the watermark is evicted. This is the streaming twin of the
-    content-hash anti-join (D1) — a plain dropDuplicates on an unbounded
-    stream accumulates state forever; dropDuplicatesWithinWatermark is
-    the 100 TB/forever-running shape. Reference analogue: the bounded
-    most-recent-first in-memory mirror (HistoryManager.cpp:84-115)."""
-    return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        key_cols
-    )
-
-
-def run_stream_to_completion(query) -> None:
-    query.processAllAvailable()
-    query.stop()

@@ -54,7 +54,6 @@ Reference analogue: the SQLite history store + content-hash cache commit
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import re
@@ -67,8 +66,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 _EPOCH = datetime(1970, 1, 1)
-# Spark bucketed output files carry the bucket id: part-...-<uuid>_00012.c000...
-_BUCKET_FILE_RE = re.compile(r"_\d{5}(?:\.c\d{3})?\.")
 
 
 def _to_us(v) -> int:
@@ -185,38 +182,24 @@ class CheckpointedTable:
             return None
         return {"bucket_key": self.bucket_key, "n_buckets": self.n_buckets}
 
-    def _files_look_bucketed(self) -> bool:
-        # iglob: stops listing at the first file, however many runs
-        for p in glob.iglob(os.path.join(self.data_dir, "**", "*.parquet"),
-                            recursive=True):
-            return bool(_BUCKET_FILE_RE.search(os.path.basename(p)))
-        return False
-
     def check_layout(self) -> None:
         """Fail LOUDLY when the constructor's layout disagrees with the
         committed files — before any Spark scan. Without this, opening a
         pre-bucketing results dir as a bucketed table dies mid-scan with
         Spark's 'Invalid bucket file' IllegalStateException (no hint),
         and the reverse silently reads bucketed files without their
-        layout guarantee. Legacy manifests (written before the layout
-        record existed) are inferred from the data file names — Spark
-        stamps the bucket id into bucketed file names."""
+        layout guarantee. Every manifest with runs records its layout; a
+        manifest without the record is refused, not guessed at."""
         m = self._load_manifest()
         if m is None or not m.get("runs"):
             return  # empty/new table: the constructor defines the layout
-        if "layout" in m:
-            stored = m["layout"]
-        else:  # legacy manifest: infer from the physical file names
-            stored = (
-                {"bucket_key": "<unknown>", "n_buckets": -1}
-                if self._files_look_bucketed() else None
+        if "layout" not in m:
+            raise RuntimeError(
+                f"checkpointed table {self.path} has committed runs but its "
+                "manifest records no layout"
             )
-        mine = self._layout()
-        if (stored is None) != (mine is None) or (
-            stored is not None and mine is not None
-            and "<unknown>" not in stored.values()
-            and stored != mine
-        ):
+        stored, mine = m["layout"], self._layout()
+        if stored != mine:
             raise RuntimeError(
                 f"checkpointed table {self.path} was committed with layout "
                 f"{stored} but is being opened with layout {mine}: reads "
