@@ -3,7 +3,6 @@
 import pyspark.sql.functions as F
 
 from xs_vlm_ocr_spark.functions import (
-    default_prompt_fallback,
     glm_cleanup_chain,
     parse_response_with_fallbacks,
 )
@@ -20,13 +19,6 @@ def test_glm_cleanup_chain(spark):
     df = spark.createDataFrame(rows, "raw string")
     got = [r["c"] for r in df.select(glm_cleanup_chain(F.col("raw")).alias("c")).collect()]
     assert got == ["hello world", "leading colon text", "wrapped", "trailing comma", "plain"]
-
-
-def test_default_prompt_fallback(spark):
-    df = spark.createDataFrame([("",), ("  ",), (None,), ("custom",)], "p string")
-    got = [r["c"] for r in
-           df.select(default_prompt_fallback(F.col("p"), "OCR_DEFAULT").alias("c")).collect()]
-    assert got == ["OCR_DEFAULT", "OCR_DEFAULT", "OCR_DEFAULT", "custom"]
 
 
 def test_parse_response_with_fallbacks(spark):

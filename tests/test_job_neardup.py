@@ -34,7 +34,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from xs_vlm_ocr_spark.job import ExtractionJob
-from xs_vlm_ocr_spark.schemas import DOCS_SCHEMA
+from xs_vlm_ocr_spark.schemas import DOCS_SCHEMA, RESULTS_RUN_SCHEMA
 
 WORDS = [f"w{i:03d}" for i in range(200)]
 BASE = " ".join(WORDS)
@@ -327,6 +327,48 @@ def test_sync_clusters_heals_lost_meta_without_rewrite(spark, tmp_path_factory):
     assert job.neardup_clusters_tbl.get_meta()["src_runs"] == runs_now
     assert job.sync_clusters(spark) is None
     assert job.near_dup_clusters(spark) is not None  # consumers work again
+
+
+def _spark_jobs(spark, fn, group):
+    """fn() and the Spark job ids it started (statusTracker, by job
+    group)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_in_step_sync_clusters_starts_no_spark_job(spark, tmp_path_factory):
+    """An in-step sync decides from the manifest meta alone: the clusters
+    snapshot is read only on the incremental path, so the no-op costs
+    no Spark job."""
+    out = str(tmp_path_factory.mktemp("job_nd_instep"))
+    job = ExtractionJob(out, near_dup_threshold=0.5)
+    job.run(spark, _docs(spark, [("a", NEAR_A), ("b", NEAR_B)]))
+    assert job.sync_clusters(spark) is not None
+    res, jobs = _spark_jobs(spark, lambda: job.sync_clusters(spark),
+                            "in_step_sync_clusters")
+    assert res is None
+    assert jobs == []
+
+
+def test_run_corpus_frame_starts_no_spark_job(spark, tmp_path_factory):
+    """Building one results run's probe frame reads with a known schema:
+    no footer-inference job (one per derived-table increment before)."""
+    out = str(tmp_path_factory.mktemp("job_nd_run_corpus"))
+    job = ExtractionJob(out)
+    rid = job.run(spark, _docs(spark, [("a", NEAR_A), ("c", OTHER_C)]))
+    df, jobs = _spark_jobs(spark, lambda: job._run_corpus(spark, rid),
+                           "run_corpus_frame")
+    assert jobs == []
+    assert df.columns == ["doc_id", "full_text"]
+    assert {r["full_text"] for r in df.collect()} == {NEAR_A, OTHER_C}
+    # the schema it reads with is the one the run's files hold
+    stored = spark.read.parquet(job.results.run_dir(rid)).schema
+    assert stored.simpleString() == RESULTS_RUN_SCHEMA.simpleString()
 
 
 def _n_cached(spark) -> int:

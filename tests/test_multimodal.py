@@ -1,15 +1,11 @@
-"""Multimodal plumbing: schema, batch shape, error isolation, and the
-size-adaptive codec / resize column logic."""
+"""Multimodal plumbing: schema, batch shape and error isolation."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from xs_vlm_ocr_spark.operators.multimodal import (
     MEDIA_SCHEMA,
-    choose_codec,
     decode_image,
     decode_media_batch,
-    plan_resize,
 )
 
 
@@ -46,19 +42,3 @@ def test_decode_matches_local_oracle(spark, media_df):
     assert (got["width"], got["height"], got["mode"]) == (
         exp["width"], exp["height"], exp["mode"]
     )
-
-
-def test_codec_resize_frame_columns(spark):
-    df = spark.createDataFrame(
-        [(1, 4000, 2000), (2, 640, 480), (3, 1920, 1080)],
-        "id int, w int, h int",
-    )
-    out = df.select(
-        "id",
-        choose_codec(F.col("w"), F.col("h")).alias("codec"),
-        plan_resize(F.col("w")).alias("scale"),
-    ).collect()
-    by_id = {r["id"]: r for r in out}
-    assert by_id[1]["codec"] == "jpeg85" and by_id[2]["codec"] == "png"
-    assert by_id[3]["codec"] == "png"  # boundary: exactly 1920x1080 stays png
-    assert by_id[1]["scale"] == 1 and by_id[2]["scale"] == 2

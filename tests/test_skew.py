@@ -1,7 +1,6 @@
 """Skew machinery: on the deliberately skewed corpus (1% of docs ~40x
 cost), byte-length range partitioning must cut the straggler ratio
-(max/median partition wall_ms) vs naive round-robin partitioning, and
-the salted aggregation must match the plain one."""
+(max/median partition wall_ms) vs naive round-robin partitioning."""
 
 import math
 import re
@@ -15,7 +14,6 @@ from xs_vlm_ocr_spark.operators.extraction import extract_spans, split_extractio
 from xs_vlm_ocr_spark.operators.skew import (
     doc_length_stats,
     repartition_by_doc_length,
-    salted_group_count,
     with_byte_len,
 )
 
@@ -122,17 +120,6 @@ def test_hot_stream_sized_by_estimated_rows(spark, skewed_docs):
     assert len(rows) == N_DOCS
     hot = Counter(r["pid"] for r in rows if r["byte_len"] >= st.hot)
     assert hot and max(hot.values()) == 1, hot
-
-
-def test_salted_group_count_matches_plain(spark, skewed_docs):
-    ex = skewed_docs.select(
-        F.explode("spans").alias("s")
-    ).select(F.col("s.kind").alias("kind"))
-    plain = {r["kind"]: r["count"] for r in
-             ex.groupBy("kind").agg(F.count(F.lit(1)).alias("count")).collect()}
-    salted = {r["kind"]: r["count"] for r in
-              salted_group_count(ex, "kind", buckets=16).collect()}
-    assert plain == salted and len(plain) >= 3
 
 
 def test_fan_out_estimates_packed_partitions(spark, tmp_path_factory):

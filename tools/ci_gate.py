@@ -54,11 +54,14 @@ PACKAGE_RES = {
     r"\bsaveAsTable\(": ("xs_vlm_ocr_spark/table_io.py",),
 }
 # package defs that no product path calls yet, kept on purpose:
-# strip_html_stdlib is strip_html's parity reference (CLAUDE.md), and
+# strip_html_stdlib is strip_html's parity reference
+# (tests/test_html_parser_parity.py),
+# merge_full_text is the pure extractor's full_text definition that
+# operators/extraction.full_text_col is pinned equal to, and
 # apply_retention and the sinks' export_* are SURVEY-mapped library
 # surfaces (retention, exports) that job_main does not wire in yet
-KEEP_UNCALLED = {"strip_html_stdlib", "apply_retention", "export_text",
-                 "export_markdown", "export_csv"}
+KEEP_UNCALLED = {"strip_html_stdlib", "merge_full_text", "apply_retention",
+                 "export_text", "export_markdown", "export_csv"}
 
 
 def run_leg(name: str, argv: list[str], ok_re: str,
@@ -74,24 +77,43 @@ def run_leg(name: str, argv: list[str], ok_re: str,
     return ok
 
 
+def _code_refs(tree: ast.AST) -> list[tuple[str, int]]:
+    """(name, line) of each code reference in a module: every Name and
+    Attribute, plus each name a ``from ... import`` brings in that the
+    module then references. Docstrings, comments, ``__all__`` strings and
+    unused imports name nothing."""
+    refs = [(n.id, n.lineno) for n in ast.walk(tree) if isinstance(n, ast.Name)]
+    refs += [(n.attr, n.lineno) for n in ast.walk(tree)
+             if isinstance(n, ast.Attribute)]
+    used = {name for name, _ in refs}
+    refs += [(a.name, n.lineno) for n in ast.walk(tree)
+             if isinstance(n, ast.ImportFrom) for a in n.names
+             if (a.asname or a.name) in used]
+    return refs
+
+
 def uncalled_package_defs(srcs: dict[str, str]) -> list[str]:
-    """Top-level package defs and classes whose name no non-test file
-    mentions outside the definition itself: dead or test-only code,
+    """Top-level package defs and classes that no non-test code
+    references outside the definition itself: dead or test-only code,
     which belongs deleted or in tests/oracles.py."""
+    trees = {path: ast.parse(src) for path, src in srcs.items()}
+    where: dict[str, list[tuple[str, int]]] = {}
+    for path, tree in trees.items():
+        for name, line in _code_refs(tree):
+            where.setdefault(name, []).append((path, line))
     bad: list[str] = []
-    for path, src in srcs.items():
+    for path, tree in trees.items():
         if os.sep + "xs_vlm_ocr_spark" + os.sep not in path:
             continue
-        lines = src.splitlines(keepends=True)
-        for node in ast.parse(src).body:
+        for node in tree.body:
             if (not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
                                       ast.ClassDef))
                     or node.name in KEEP_UNCALLED):
                 continue
-            own = "".join(lines[node.lineno - 1:node.end_lineno])
-            word = re.compile(rf"\b{re.escape(node.name)}\b")
-            if sum(len(word.findall(s)) for s in srcs.values()) == len(word.findall(own)):
-                bad.append(f"{path}: '{node.name}' is named by no non-test file")
+            if all(other == path and node.lineno <= line <= node.end_lineno
+                   for other, line in where.get(node.name, ())):
+                bad.append(f"{path}: '{node.name}' is referenced by no "
+                           "non-test code")
     return bad
 
 

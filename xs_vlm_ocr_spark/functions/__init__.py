@@ -6,13 +6,11 @@ driver contract's ``glm_cleanup`` query does).
 """
 
 from xs_vlm_ocr_spark.functions.cleanup import (
-    default_prompt_fallback,
     glm_cleanup_chain,
     parse_response_with_fallbacks,
 )
 
 __all__ = [
     "glm_cleanup_chain",
-    "default_prompt_fallback",
     "parse_response_with_fallbacks",
 ]

@@ -26,12 +26,6 @@ def glm_cleanup_chain(col: Column) -> Column:
     return F.trim(out)
 
 
-def default_prompt_fallback(prompt: Column, default: str) -> Column:
-    """Empty/null prompt -> canned default (reference
-    QwenAdapter.cpp:235-241)."""
-    return F.coalesce(F.nullif(F.trim(prompt), F.lit("")), F.lit(default))
-
-
 def parse_response_with_fallbacks(resp: Column) -> Column:
     """Schema-tolerant JSON response parse (reference DoubaoAdapter's
     3-way fallback, src/adapters/DoubaoAdapter.cpp:72-123, and the

@@ -37,7 +37,7 @@ from xs_vlm_ocr_spark.operators.extraction import (
     with_content_hash,
 )
 from xs_vlm_ocr_spark.operators.skew import repartition_by_doc_length
-from xs_vlm_ocr_spark.schemas import LINEAGE_SCHEMA
+from xs_vlm_ocr_spark.schemas import LINEAGE_SCHEMA, RESULTS_RUN_SCHEMA
 from xs_vlm_ocr_spark.table_io import (REWRITE_PREFIXES, CheckpointedTable,
                                        check_run_id)
 
@@ -393,7 +393,9 @@ class ExtractionJob:
         if fail_after_staging:
             return run_id  # crash point: nothing committed, table unchanged
 
-        staged = spark.read.parquet(staging)
+        # the staged schema is the plan's: a known-schema read starts no
+        # footer-inference job
+        staged = spark.read.schema(combined.schema).parquet(staging)
         if self.replay_hits and "is_hit" in staged.columns:
             # reference hit path (MainWindow.cpp:1650-1659): for input
             # hashes already committed, re-emit the latest successful
@@ -546,8 +548,11 @@ class ExtractionJob:
         it ingested (else healing reconsiders it forever)."""
         run_path = self.results.run_dir(run_id)
         if os.path.isdir(run_path):
+            # a known-schema read starts no footer-inference job; the full
+            # run schema keeps the optimizer's size estimate, and so the
+            # near-dup plan and its output files, as with an inferred one
             return (
-                spark.read.parquet(run_path)
+                spark.read.schema(RESULTS_RUN_SCHEMA).parquet(run_path)
                 .filter(F.col("success") & (F.length("full_text") > 0))
                 .select(F.col("content_hash").alias("doc_id"), "full_text")
             )
@@ -816,7 +821,6 @@ class ExtractionJob:
             r for r in self.neardup_pairs.all_time_runs()
             if not r.startswith(REWRITE_PREFIXES)
         )
-        prev_tbl = self.neardup_clusters_tbl.read(spark)
         meta = self.neardup_clusters_tbl.get_meta()
         reflected = set(meta["src_runs"]) if "src_runs" in meta else None
         pending = [r for r in cur
@@ -835,6 +839,7 @@ class ExtractionJob:
             inc = spark.read.parquet(
                 *[self.neardup_pairs.run_dir(r) for r in pending]
             ).select("a", "b")
+            prev_tbl = self.neardup_clusters_tbl.read(spark)
             assignment = incremental_components(
                 prev_tbl.select("node", "component"), inc
             )

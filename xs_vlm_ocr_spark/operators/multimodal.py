@@ -14,9 +14,7 @@ vector. Everything around it — schema, Arrow batch shape, mapInPandas
 partitioning, error-row isolation — is real and tested, so swapping a
 real codec in is a one-function change.
 
-Reference analogues: size-adaptive codec choice (QwenAdapter.cpp:99-125)
--> ``choose_codec``; small-image upscale (TesseractAdapter.cpp:100-107)
--> ``plan_resize``; RGB32 normalize (CustomAdapter.cpp:99-114) -> the
+Reference analogue: RGB32 normalize (CustomAdapter.cpp:99-114) -> the
 normalize flag of ``decode_batch``.
 """
 
@@ -28,7 +26,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -105,18 +102,3 @@ def decode_media_batch(media: DataFrame, fake: bool = True) -> DataFrame:
     return media.select("media_ref", "media_type", "payload").mapInPandas(
         run, schema=DECODED_DDL
     )
-
-
-def choose_codec(width, height, area_threshold: int = 1920 * 1080):
-    """Size-adaptive codec column (reference QwenAdapter.cpp:106-117):
-    large frames re-encode lossy, small stay lossless."""
-    return F.when(width * height > area_threshold, F.lit("jpeg85")).otherwise(F.lit("png"))
-
-
-def plan_resize(width, min_width: int = 800):
-    """Integer upscale factor for small media (reference
-    TesseractAdapter.cpp:100-107): floor(min_width/width)+1, 1 if big."""
-    return F.when(width < min_width, (F.lit(min_width) / width).cast("int") + 1).otherwise(
-        F.lit(1)
-    )
-

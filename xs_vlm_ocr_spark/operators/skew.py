@@ -14,8 +14,6 @@ giants with dwarves and produces straggler tasks. Mitigations:
     partitions — about one giant doc per task within the sketch's rank
     error, and no empty Python tasks (each costs a fixed worker setup
     whatever its row count).
-  * ``salted_group_count``: two-phase (salted partial + final) aggregation
-    for hot grouping keys.
   * AQE skew-join splitting is enabled session-wide
     (spark.sql.adaptive.skewJoin.enabled, see session.py).
 
@@ -199,13 +197,3 @@ def fan_out_small_input(df: DataFrame, min_partitions: int | None = None) -> Dat
     if packed < target:
         return df.repartition(target)
     return df
-
-
-def salted_group_count(df: DataFrame, key: str, buckets: int = 16) -> DataFrame:
-    """groupBy(key).count() resistant to hot keys: partial agg on
-    (key, salt) then final agg on key. Catalyst already does map-side
-    partial aggregation; explicit salting additionally splits a single
-    hot reduce key across `buckets` reducers."""
-    salted = df.withColumn("_salt", F.pmod(F.xxhash64(F.col(key)), F.lit(buckets)))
-    partial = salted.groupBy(key, "_salt").agg(F.count(F.lit(1)).alias("_c"))
-    return partial.groupBy(key).agg(F.sum("_c").alias("count"))

@@ -92,18 +92,11 @@ def quality_score(text: Column) -> Column:
     return (len_ok + word_ok + punct_ok) / F.lit(3.0)
 
 
-def fingerprint64(text: Column) -> Column:
-    """64-bit content fingerprint of normalized text (xxhash64 of the
-    whitespace-canonical form) — the cheap exact-dup key. Fastest
-    (native JVM hash); not portable to DuckDB, covered by tests."""
-    return F.xxhash64(F.regexp_replace(F.trim(text), WS_RE, " "))
-
-
 def fingerprint64_md5(text: Column) -> Column:
-    """Portable 64-bit fingerprint: first 60 bits of md5 of the same
-    whitespace-canonical form, as a signed BIGINT. Identical dedup
-    semantics to fingerprint64 (both are uniform content hashes) but
-    reproducible in any engine with md5 — DuckDB oracle:
+    """Portable 64-bit content fingerprint (the exact-dup key): first 60
+    bits of md5 of the whitespace-canonical form (trimmed, each
+    whitespace run one space), as a signed BIGINT, reproducible in any
+    engine with md5 — DuckDB oracle:
     CAST(('0x' || substr(md5(...), 1, 15)) AS BIGINT). 15 hex digits
     keep the value inside the positive BIGINT range on both sides."""
     canon = F.regexp_replace(F.trim(text), WS_RE, " ")

@@ -93,6 +93,15 @@ RESULTS_SCHEMA = T.StructType(
     ]
 )
 
+# One committed results run's parquet columns: RESULTS_SCHEMA then the
+# engine extras, in job.stamp_results' order.
+RESULTS_RUN_SCHEMA = T.StructType(
+    RESULTS_SCHEMA.fields + [
+        T.StructField("doc_id", T.StringType(), True),
+        T.StructField("spans_out", T.ArrayType(SPAN_OUT, containsNull=False), True),
+    ]
+)
+
 LINEAGE_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),

@@ -8,10 +8,30 @@ partitions sized to cores locally / to data volume on a cluster).
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+
+
+def _worker_daemon_conf() -> dict[str, str]:
+    """``spark.python.daemon.module`` = ``worker_daemon`` when the Python
+    workers can import it: this package is a plain directory under the
+    driver's cwd, a ``PYTHONPATH`` entry or site-packages (get_spark
+    runs local[N], so the workers share the driver's cwd and env). A
+    package imported from an archive (``spark-submit --py-files``) keeps
+    Spark's default daemon: one that cannot import its module fails
+    every Python task."""
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    if not os.path.isfile(os.path.join(pkg, "worker_daemon.py")):
+        return {}
+    visible = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+               *site.getsitepackages(), site.getusersitepackages()]
+    root = os.path.realpath(os.path.dirname(pkg))
+    if any(p and os.path.realpath(p) == root for p in visible):
+        return {"spark.python.daemon.module": f"{__package__}.worker_daemon"}
+    return {}
 
 
 def get_spark(
@@ -50,8 +70,13 @@ def get_spark(
             " -Duser.language=en -Duser.country=US",
         )
         .config("spark.ui.enabled", "false")
+        # pyspark's call-site capture wraps every F.* / Column / DataFrame
+        # call in extra py4j round trips (an ExtractionJob.run makes about
+        # twice as many with it on); it only adds the "== DataFrame =="
+        # call-site block to JVM error messages
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_worker_daemon_conf(), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
